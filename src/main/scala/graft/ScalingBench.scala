@@ -49,9 +49,6 @@ object ScalingBench {
       // deeper pipeline: every batch's write job in flight at once
       case Some("pipe8") => graft.cdc.CdcApply.Options(mergeOnRead = true,
         compactEvery = 16, pipelineDepth = 8)
-      // pipelined AND shuffle-free: zero exchanges in the hot path
-      case Some("pipefree") => graft.cdc.CdcApply.Options(mergeOnRead = true,
-        compactEvery = 16, pipelineDepth = 4, shuffleFreeAppend = true)
       // STREAMING-path pipelined apply (Structured Streaming + CdcPipeline)
       // — the north-star deployment; target: within ~10% of pipe8
       case Some("spipe8") => graft.cdc.CdcApply.Options(mergeOnRead = true,
@@ -65,7 +62,7 @@ object ScalingBench {
       // falling through to default Options() would run the streaming path
       // as serial CoW and report it as a gated scaling result
       case Some(other) => sys.error(
-        s"unknown mode '$other' (expected cow|mor|pipe|pipe8|pipefree|spipe8|stail8)")
+        s"unknown mode '$other' (expected cow|mor|pipe|pipe8|spipe8|stail8)")
     }
     val mode = args.drop(4).headOption
     val streaming = mode.exists(_.startsWith("spipe")) || mode.exists(_.startsWith("stail"))

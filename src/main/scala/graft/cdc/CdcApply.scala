@@ -63,22 +63,12 @@ object CdcApply {
         * never stalls the ordered-commit loop (the streaming/pipelined
         * default); false = inline, deterministic (tests). */
       backgroundCompact: Boolean = true,
-      /** merge-on-read replay only: number of micro-batches whose WRITE
-        * jobs may run concurrently (commits stay strictly ordered). >1
-        * overlaps the driver's per-batch serial work (planning, snapshot
-        * IO, footer stats) with executor work — the scaling-efficiency
-        * lever; 1 = fully serial (foreachBatch-equivalent). */
+      /** batches in flight (write dispatched, commit outstanding) for
+        * merge-on-read replay and the pipelined stream ([[CdcPipeline]]);
+        * commits stay strictly ordered. >1 overlaps the driver's per-batch
+        * serial work (planning, snapshot IO, footer stats) with executor
+        * work; 1 means serial. */
       pipelineDepth: Int = 1,
-      /** merge-on-read only: append the batch with ZERO exchanges (no
-        * in-batch LWW — read-side/compaction LWW resolves duplicates
-        * identically; equality pinned by LakeSpec). MEASURED TO LOSE on
-        * this workload: every task writes every bucket, so files/batch =
-        * tasks × buckets (~1024), footer+commit cost balloons and
-        * auto-compaction fires each batch — 252k ev/s vs 1.8M+ for the
-        * single-exchange path at local[16]. Kept as a documented negative
-        * result: the one exchange is what bounds file count, which at
-        * object-storage scale matters even more. */
-      shuffleFreeAppend: Boolean = false,
       /** when set, rows failing validation are appended here (parquet,
         * partitioned by batch) instead of being silently dropped — the
         * dead-letter queue of the ingest pipeline. */
@@ -231,8 +221,7 @@ object CdcApply {
         // the previous batch's persisted weights (steady-state signal)
         val statsOpt = table.appendDelta(batch, Model.keyCols, batchId,
           saltPartitions = opts.mergeSaltPartitions,
-          bucketWeights = table.currentSnapshot.bucketWeights,
-          shuffleFree = opts.shuffleFreeAppend)
+          bucketWeights = table.currentSnapshot.bucketWeights)
         if (statsOpt.isDefined) maybeCompact(table, opts)
         val durMs = (System.nanoTime() - t0) / 1000000
         statsOpt.fold(0L) { stats =>
@@ -283,75 +272,29 @@ object CdcApply {
     } finally if (opts.preDedup) batch.unpersist(blocking = false)
   }
 
-  /** Batch replay: apply a sequence of log-segment directories in order.
-    * Each segment is one "micro-batch". With `mergeOnRead` and
-    * `pipelineDepth > 1`, dispatches to [[replayPipelined]]. */
+  /** Batch replay: apply a sequence of log-segment directories in order,
+    * segment i as batch id i. Merge-on-read replay runs through a
+    * [[CdcPipeline]] (up to `pipelineDepth` batches in flight, ordered
+    * commits); copy-on-write replay stays a serial loop, since each merge
+    * reads the table and leaves nothing to overlap. */
   def replay(spark: SparkSession, table: LakeTable, segments: Seq[String],
-      opts: Options = Options()): Unit = {
-    if (opts.mergeOnRead && opts.pipelineDepth > 1)
-      replayPipelined(spark, table, segments, opts)
-    else {
+      opts: Options = Options()): Unit =
+    if (opts.mergeOnRead) {
+      val pipeline = new CdcPipeline(spark, table, i => Seq(segments(i.toInt)), opts)
+      try {
+        segments.indices.foreach { i =>
+          pipeline.submit(spark.read.schema(Model.changeEventSchema).parquet(segments(i)),
+            i.toLong)
+        }
+        pipeline.close()
+      } catch { case t: Throwable => pipeline.abort(); throw t }
+    } else {
       segments.zipWithIndex.foreach { case (seg, i) =>
         applyBatch(table, spark.read.parquet(seg), i.toLong, opts)
       }
       table.awaitMaintenance()
       table.flushLineage()
     }
-  }
-
-  /** Pipelined merge-on-read replay: up to `pipelineDepth` batches' delta
-    * WRITE jobs run concurrently (each is a pure Spark job producing
-    * unreachable files), while COMMITS apply strictly in batch order on
-    * the driver. This overlaps the per-batch serial floor — query
-    * planning, snapshot IO, footer stats, lineage — with executor work,
-    * which is exactly the cost that caps N→4N scaling efficiency when
-    * batches are short. Exactly-once is unchanged: a batch id commits
-    * once; files written for an already-applied id stay orphaned
-    * (identical to the kill-during-commit story).
-    *
-    * Correct to run concurrently because MoR delta writes read NOTHING
-    * from the table — only commit order matters. Compaction runs between
-    * commits, folding only already-committed deltas. */
-  def replayPipelined(spark: SparkSession, table: LakeTable,
-      segments: Seq[String], opts: Options = Options(mergeOnRead = true)): Unit = {
-    require(opts.mergeOnRead, "pipelined replay requires mergeOnRead")
-    val depth = math.max(2, opts.pipelineDepth)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(depth)
-    try {
-      val futures = segments.zipWithIndex.map { case (seg, i) =>
-        pool.submit(new java.util.concurrent.Callable[Option[(LakeTable.DeltaWrite, Long)]] {
-          def call(): Option[(LakeTable.DeltaWrite, Long)] = {
-            val t0 = System.nanoTime()
-            if (table.currentSnapshot.applied(i.toLong)) None
-            else {
-              val events = spark.read.parquet(seg)
-              opts.deadLetterDir.foreach(writeDeadLetters(events, i.toLong, _))
-              val batch = prepareBatch(events, opts)
-              val w = table.writeDeltaFiles(batch, Model.keyCols,
-                saltPartitions = opts.mergeSaltPartitions,
-                bucketWeights = table.currentSnapshot.bucketWeights,
-                shuffleFree = opts.shuffleFreeAppend)
-              Some((w, (System.nanoTime() - t0) / 1000000))
-            }
-          }
-        })
-      }
-      futures.zipWithIndex.foreach { case (f, i) =>
-        f.get() match {
-          case Some((w, durMs)) =>
-            if (table.commitDelta(i.toLong, w)) {
-              table.bufferLineage(i.toLong, w.stats, durMs)
-              maybeCompact(table, opts)
-            }
-          case None => ()
-        }
-      }
-    } finally {
-      pool.shutdown()
-      table.awaitMaintenance() // include compaction debt in the replay
-      table.flushLineage()
-    }
-  }
 
   /** Compaction trigger shared by the apply paths: background by default
     * (never stalls ordered commits), inline when the caller wants

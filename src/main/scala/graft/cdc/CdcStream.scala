@@ -2,7 +2,7 @@ package graft.cdc
 
 import graft.lake.LakeTable
 import graft.model.Model
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftShim, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
@@ -25,11 +25,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * (simple_executor_threaded.cpp:26-69).
  *
  * Pipelined mode (`opts.mergeOnRead && opts.pipelineDepth > 1`): batches
- * flow through a [[CdcPipeline]] — concurrent delta-write jobs, strictly
- * ordered commits, durable per-batch journal for exactly-once across
- * kill/restart (see CdcPipeline's scaladoc for the recovery argument).
- * This gives the Structured Streaming deployment the same write/commit
- * overlap the batch `replayPipelined` measured (round-3 verdict item 1).
+ * flow through a [[CdcPipeline]], the same write/ordered-commit engine
+ * merge-on-read batch replay uses. Its batch file lists come from the
+ * checkpoint's file-source manifest, which doubles as the recovery journal
+ * for exactly-once across kill/restart (see CdcPipeline's scaladoc).
  */
 object CdcStream {
 
@@ -84,7 +83,8 @@ object CdcStream {
       trigger: Trigger,
       opts: CdcApply.Options): (StreamingQuery, CdcPipeline) = {
     CdcPipeline.recoverPending(spark, table, checkpointDir, opts)
-    val pipeline = new CdcPipeline(spark, table, checkpointDir, opts)
+    val pipeline = new CdcPipeline(spark, table,
+      GraftShim.sourceLogReader(spark, checkpointDir), opts)
     val q = source(spark, logDir, maxFilesPerTrigger).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

@@ -86,8 +86,12 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * batches writing one slice per core, while a production deployment
     * targeting 128 MB–1 GB files sets it to the row count of such a file
     * (e.g. ~10^6 transcript rows). */
-  private lazy val minRowsPerSlice: Long =
-    spark.conf.get("spark.graft.minRowsPerSlice", "8192").toLong
+  private lazy val minRowsPerSlice: Long = {
+    val raw = spark.conf.get("spark.graft.minRowsPerSlice", "8192")
+    val v = raw.trim.toLongOption
+    require(v.exists(_ >= 1), s"spark.graft.minRowsPerSlice must be an integer >= 1, got '$raw'")
+    v.get
+  }
 
   private val rootPath: Path = Paths.get(root)
   private val snapsDir: Path = rootPath.resolve("snapshots")
@@ -715,24 +719,15 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * 10^10-event replay (read-side LWW + [[compact]] resolve). */
   def writeDeltaFiles(batch: DataFrame, keyCols: Seq[String],
       saltPartitions: Int = 0,
-      bucketWeights: Map[Int, Long] = Map.empty,
-      shuffleFree: Boolean = false): DeltaWrite = {
+      bucketWeights: Map[Int, Long] = Map.empty): DeltaWrite = {
     val s = currentSnapshot
     val (newCols, aligned) = alignTo(s, batch)
-    val planned = (0 until s.numBuckets).toSet
-    val newFiles =
-      if (shuffleFree) {
-        // ZERO-exchange append: write each input partition's rows straight
-        // into their bucket dirs (dynamic partition write). In-batch
-        // duplicate keys survive into the delta — read-side LWW and
-        // compaction resolve them identically, so final state is unchanged
-        // (pinned by LakeSpec); the trade is slightly larger deltas and up
-        // to tasks×buckets files per batch vs. no shuffle barrier at all.
-        writePartitioned(aligned, planned)
-      } else rewriteBuckets(aligned, planned, keyCols, saltPartitions,
-        bucketWeights, sortedDedup = true, saltBuckets = 1)
+    val newFiles = rewriteBuckets(aligned, (0 until s.numBuckets).toSet, keyCols,
+      saltPartitions, bucketWeights, sortedDedup = true, saltBuckets = 1)
     val written = newFiles.filter(_._2.nonEmpty)
-    val (stats, ranges) = footerStats(written)
+    // a failure here leaves no DeltaWrite for a caller to commit or abandon
+    val (stats, ranges) =
+      try footerStats(written) catch { case t: Throwable => releasePending(written); throw t }
     DeltaWrite(written, stats, newCols, ranges)
   }
 
@@ -742,14 +737,6 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     if (maxRecordsPerFile > 0)
       df.write.option("maxRecordsPerFile", maxRecordsPerFile)
     else df.write
-
-  /** Direct bucket-partitioned write of `df` as-is (no exchange, no LWW). */
-  private def writePartitioned(df: DataFrame, listSet: Set[Int]): Map[Int, Seq[String]] = {
-    val commitId = UUID.randomUUID().toString.take(12)
-    val outDir = rootPath.resolve(s"data/commit-$commitId")
-    boundedWriter(df).partitionBy("_bucket").mode("overwrite").parquet(outDir.toString)
-    listFiles(outDir, listSet)
-  }
 
   /** Merge-on-read stage 2: register the delta files + batch id (+ any
     * schema evolution) in ONE ordered commit. Returns false when the batch
@@ -783,10 +770,9 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * stages directly. Returns footer stats, or None if already applied. */
   def appendDelta(batch: DataFrame, keyCols: Seq[String], batchId: Long,
       saltPartitions: Int = 0,
-      bucketWeights: Map[Int, Long] = Map.empty,
-      shuffleFree: Boolean = false): Option[Seq[(Int, Long, Long, Long)]] = {
+      bucketWeights: Map[Int, Long] = Map.empty): Option[Seq[(Int, Long, Long, Long)]] = {
     if (currentSnapshot.applied(batchId)) return None
-    val w = writeDeltaFiles(batch, keyCols, saltPartitions, bucketWeights, shuffleFree)
+    val w = writeDeltaFiles(batch, keyCols, saltPartitions, bucketWeights)
     if (commitDelta(batchId, w)) Some(w.stats) else None
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.lake.LakeTable
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{DataFrame, GraftShim, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow, Offset => OffsetV2}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
@@ -49,6 +50,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
     maxRowsPerTrigger: Option[Long] = None)
   extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
+  private val log = LogManager.getLogger(classOf[ChangeFeedSource])
   private val pinnedSchema: StructType = table.changeSchema
 
   /** version → (exact change-event count, files added) for that commit
@@ -123,7 +125,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
           // infrastructure error (footer IO) must not be silently folded
           // into a shorter window, so say which error closed it
           case scala.util.control.NonFatal(e) if rows > 0 =>
-            System.err.println(s"[graft-changes] row admission stopped at " +
+            log.warn("row admission stopped at " +
               s"version $v: walking v${v + 1} failed " +
               s"(${e.getClass.getSimpleName}: ${e.getMessage}); delivering " +
               "the window admitted so far — the error re-fires loudly if " +
@@ -267,6 +269,8 @@ class ChangeFeedSourceProvider extends StreamSourceProvider with DataSourceRegis
 }
 
 object ChangeFeedSourceProvider {
+  private val log = LogManager.getLogger(classOf[ChangeFeedSourceProvider])
+
   private def openTable(spark: SparkSession, parameters: Map[String, String]): LakeTable = {
     val path = parameters.getOrElse("path",
       sys.error("graft-changes requires option 'path' = lake table root"))
@@ -297,7 +301,7 @@ object ChangeFeedSourceProvider {
       // advanced) — that is the EXPECTED steady state, not a conflict, so
       // only an explicit numeric request that disagrees gets the warning
       if (v != requested && warnOnConflict)
-        System.err.println(s"[graft-changes] using persisted startingVersion $v " +
+        log.warn(s"using persisted startingVersion $v " +
           s"from $file (this run resolved $requested; the checkpointed start wins)")
       v
     }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.gen.ChangeLogGen
 import graft.lake.LakeTable
 import graft.model.Model
+import org.apache.spark.sql.GraftShim
 
 /** Deterministic fault injection at the crash/interrupt windows of the
   * pipelined streaming apply (round-5 verdict item 1: the abort-mid-stream
@@ -129,7 +130,7 @@ class CrashWindowSpec extends SparkSpec {
 
     // hold EVERY async write in flight: depth batches journal + dispatch,
     // none commits — the widest possible uncommitted window at the abort
-    val pipeline = new CdcPipeline(spark, table, ckDir, opts)
+    val pipeline = new CdcPipeline(spark, table, GraftShim.sourceLogReader(spark, ckDir), opts)
     val held = new java.util.concurrent.atomic.AtomicInteger()
     @volatile var release = false
     pipeline.testWriteHook = () => {

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.gen.ChangeLogGen
 import graft.lake.LakeTable
 import graft.model.Model
+import org.apache.spark.sql.GraftShim
 
 /** Structured Streaming front: exactly-once across restart, mid-replay
   * kill, idempotent re-delivery (SURVEY.md §5.3). */
@@ -176,7 +177,7 @@ class StreamSpec extends SparkSpec {
 
     // build the pipeline OURSELVES (not via startPipelined) so the write
     // hook is installed before the query can dispatch its first batch
-    val pipeline = new CdcPipeline(spark, table, ckDir, opts)
+    val pipeline = new CdcPipeline(spark, table, GraftShim.sourceLogReader(spark, ckDir), opts)
     val started = new java.util.concurrent.CountDownLatch(1)
     @volatile var release = false
     pipeline.testWriteHook = () => {

@@ -27,40 +27,90 @@ class LakeSpec extends SparkSpec {
     val expect = Oracle.finalState(collectEvents(cfg))
       .map { case (k, e) => k -> ((e.role, e.text)) }
 
-    val table = new LakeTable(spark, tmpDir("pipe-table"), numBuckets = 4)
+    // depth 1 is the serial case of the same pipeline
+    Seq(3, 1).foreach { depth =>
+      val table = new LakeTable(spark, tmpDir(s"pipe-table-d$depth"), numBuckets = 4)
+      table.create(Model.transcriptSchema)
+      val opts = CdcApply.Options(mergeOnRead = true, compactEvery = 100, pipelineDepth = depth)
+      CdcApply.replay(spark, table, segments, opts)
+      assert(stateOf(table) == expect, s"pipelined replay final state (depth $depth)")
+
+      // commits applied in order, exactly once
+      val s = table.currentSnapshot
+      assert(s.appliedWatermark == segments.size - 1)
+      assert(s.appliedExceptions.isEmpty)
+
+      // re-replay (all ids applied) is a no-op
+      val v = s.version
+      CdcApply.replay(spark, table, segments, opts)
+      assert(table.currentSnapshot.version == v)
+      assert(stateOf(table) == expect)
+
+      // pipelined + compaction interleaved also converges
+      val t2 = new LakeTable(spark, tmpDir(s"pipe-table2-d$depth"), numBuckets = 4)
+      t2.create(Model.transcriptSchema)
+      CdcApply.replay(spark, t2, segments,
+        CdcApply.Options(mergeOnRead = true, compactEvery = 2, pipelineDepth = depth))
+      assert(stateOf(t2) == expect, s"pipelined replay with auto-compaction (depth $depth)")
+    }
+  }
+
+  test("pipelined MoR replay: a failed segment stops in order, releases pending writes, resumes") {
+    val cfg = ChangeLogGen.Config(numEvents = 12000, numConversations = 60, maxTurns = 16)
+    val segments = ChangeLogGen.writeLog(spark, tmpDir("fail-log"), cfg, numSegments = 6)
+    val expect = Oracle.finalState(collectEvents(cfg))
+      .map { case (k, e) => k -> ((e.role, e.text)) }
+    val table = new LakeTable(spark, tmpDir("fail-table"), numBuckets = 4)
     table.create(Model.transcriptSchema)
     val opts = CdcApply.Options(mergeOnRead = true, compactEvery = 100, pipelineDepth = 3)
+
+    val victim = {
+      val st = java.nio.file.Files.list(java.nio.file.Paths.get(segments(3)))
+      try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq.min
+      finally st.close()
+    }
+    val original = java.nio.file.Files.readAllBytes(victim)
+    java.nio.file.Files.write(victim, "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception](CdcApply.replay(spark, table, segments, opts))
+    assert(table.currentSnapshot.appliedWatermark == 2,
+      "segments before the failed one commit, none after it")
+    // writes of later segments may still land after the abort; each must
+    // release its pending-file registrations when it does. Wait until no
+    // Spark job has run for 2 s, so every such write has landed.
+    val tracker = spark.sparkContext.statusTracker
+    var idleSince = System.nanoTime()
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    while (System.nanoTime() - idleSince < 2000L * 1000000L && System.nanoTime() < deadline) {
+      if (tracker.getActiveJobIds().nonEmpty) idleSince = System.nanoTime()
+      Thread.sleep(50)
+    }
+    assert(table.pendingFileCount == 0,
+      s"no pendingWriteFiles residue after a failed replay (still ${table.pendingFileCount})")
+
+    java.nio.file.Files.write(victim, original)
     CdcApply.replay(spark, table, segments, opts)
-    assert(stateOf(table) == expect, "pipelined replay final state")
+    assert(table.currentSnapshot.appliedWatermark == segments.size - 1)
+    assert(stateOf(table) == expect, "resumed replay final state")
+  }
 
-    // commits applied in order, exactly once
-    val s = table.currentSnapshot
-    assert(s.appliedWatermark == segments.size - 1)
-    assert(s.appliedExceptions.isEmpty)
-
-    // re-replay (all ids applied) is a no-op
-    val v = s.version
-    CdcApply.replay(spark, table, segments, opts)
-    assert(table.currentSnapshot.version == v)
-    assert(stateOf(table) == expect)
-
-    // pipelined + compaction interleaved also converges
-    val t2 = new LakeTable(spark, tmpDir("pipe-table2"), numBuckets = 4)
-    t2.create(Model.transcriptSchema)
-    CdcApply.replay(spark, t2, segments,
-      CdcApply.Options(mergeOnRead = true, compactEvery = 2, pipelineDepth = 3))
-    assert(stateOf(t2) == expect, "pipelined replay with auto-compaction")
-
-    // shuffle-free append: zero-exchange writes, duplicates resolved by
-    // read-side LWW and compaction — identical final state
-    val t3 = new LakeTable(spark, tmpDir("pipe-table3"), numBuckets = 4)
-    t3.create(Model.transcriptSchema)
-    CdcApply.replay(spark, t3, segments,
-      CdcApply.Options(mergeOnRead = true, compactEvery = 100, pipelineDepth = 3,
-        shuffleFreeAppend = true))
-    assert(stateOf(t3) == expect, "shuffle-free append, read-side resolution")
-    t3.compact()
-    assert(stateOf(t3) == expect, "shuffle-free append after compaction")
+  test("spark.graft.minRowsPerSlice below 1 fails where it is read, naming the key") {
+    val key = "spark.graft.minRowsPerSlice"
+    val table = new LakeTable(spark, tmpDir("min-rows-table"), numBuckets = 2)
+    table.create(Model.transcriptSchema)
+    val batch = Seq((1L, "I", "c1", 0, "user", "a"), (2L, "I", "c2", 0, "user", "b"))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text")
+      .withColumn("ts", org.apache.spark.sql.functions.current_timestamp())
+    val opts = CdcApply.Options(mergeOnRead = true)
+    spark.conf.set(key, "0")
+    try {
+      // the slice plan reads the key once the table has bucket weights,
+      // i.e. from the second batch on
+      val e = intercept[IllegalArgumentException] {
+        CdcApply.applyBatch(table, batch, 0L, opts)
+        CdcApply.applyBatch(table, batch, 1L, opts)
+      }
+      assert(e.getMessage.contains(key), e.getMessage)
+    } finally spark.conf.unset(key)
   }
 
   test("snapshot metadata is bounded: 10k applied batches, O(buckets) snapshot bytes") {
