@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** Optimization-round probe (guide §1): splits the MoR micro-batch apply
   * into its phases (read+prepare, delta write job incl. footer stats,
-  * ordered commit) and A/Bs the LWW dedup implementations with a noop
-  * sink. NOT part of the frozen driver bench. */
+  * ordered commit) and the q_change_feed_stream body. NOT part of the
+  * frozen driver bench. */
 object ProbeCdc {
   def t[A](label: String)(f: => A): A = {
     val t0 = System.nanoTime()
@@ -39,44 +39,19 @@ object ProbeCdc {
     table.create(Model.transcriptSchema)
     segments.zipWithIndex.foreach { case (seg, i) =>
       val ev = t(s"b$i read+plan") { spark.read.parquet(seg) }
-      val batch = CdcApply.prepareBatch(ev, opts)
+      val batch = CdcApply.prepareBatch(ev)
       val w = t(s"b$i writeDeltaFiles") {
-        table.writeDeltaFiles(batch, Model.keyCols, saltPartitions = 4,
+        table.writeDeltaFiles(batch, Model.keyCols,
           bucketWeights = table.currentSnapshot.bucketWeights)
       }
       t(s"b$i commit") { table.commitDelta(i.toLong, w) }
       t(s"b$i maybeCompact") {
-        table.maybeCompactAsync(opts.compactEvery, opts.mergeSaltPartitions)
+        table.maybeCompactAsync(opts.compactEvery)
       }
       println(s"PROBE b$i files=${w.files.values.map(_.size).sum} rows=${w.stats.map(_._2).sum}")
     }
     t("awaitMaintenance") { table.awaitMaintenance() }
     Bench.deleteRec(tableDir)
-
-    // A/B: sorted single-exchange keep-first (Row codec) vs groupBy max_by
-    val seg0 = spark.read.parquet(segments.head)
-    val batch0 = CdcApply.prepareBatch(seg0, opts)
-      .withColumn("_bucket", pmod(xxhash64(col("conv_id"), lit(42)), lit(32)).cast("int"))
-    (1 to 3).foreach { r =>
-      t(s"ab$r lwwDedupSorted(noop)") {
-        CdcApply.lwwDedupSorted(batch0, Model.keyCols, Seq(col("_bucket")), 32)
-          .write.format("noop").mode("overwrite").save()
-      }
-      t(s"ab$r lwwDedup groupBy+repart(noop)") {
-        CdcApply.lwwDedup(batch0, Model.keyCols, 1)
-          .repartition(32, col("_bucket"))
-          .write.format("noop").mode("overwrite").save()
-      }
-      t(s"ab$r prepare only(noop)") {
-        batch0.write.format("noop").mode("overwrite").save()
-      }
-      t(s"ab$r repart+sort only(noop)") {
-        batch0.repartition(32, col("_bucket"))
-          .sortWithinPartitions(col("_bucket").asc, col("conv_id").asc,
-            col("turn_idx").asc, col("_lsn").desc)
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
 
     // q_change_feed_stream phase split (mirrors Queries.scala body)
     (1 to 2).foreach { r =>

@@ -4,7 +4,6 @@ import graft.lake.LakeTable
 import graft.model.Model
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /**
  * The CDC apply pipeline — the engine's flagship operator chain, mapping
@@ -15,41 +14,28 @@ import scala.jdk.CollectionConverters._
  *     → per-row mapping rules (reference create(), op 9 — compiled Columns)
  *     → validation / dead-letter null-skip (reference op 5)
  *     → LSN last-writer-wins per (conv_id, turn_idx)   (reference op 6 re-targeted)
- *     → salted two-stage aggregation for hot conversations
  *     → LakeTable MERGE (reference op 10 re-targeted; idempotent per op 11)
  *
- * Config notes for 100 TB: the only required shuffles per micro-batch are
- * (1) the LWW groupBy — map-side partial `max_by` collapses each task's
- * duplicate keys before the exchange, and the optional salted first stage
- * splits a hot key across `saltBuckets` reducers — and (2) the bucket
- * repartition inside the MERGE write. Everything upstream (rule columns,
- * validation filters) is narrow and whole-stage-codegen'd.
+ * Config notes for 100 TB: the only shuffle per micro-batch is the LWW
+ * exchange inside the table write — one repartition by (bucket, weight-
+ * salted key), a sort within partitions and a streaming keep-first, which
+ * feeds the bucket-partitioned parquet write directly. Everything upstream
+ * (rule columns, validation filters) is narrow and whole-stage-codegen'd.
+ * That exchange ships every row of a key, so a redelivery storm (one key
+ * sent 10^5 times) is not bounded yet: ROADMAP direction 5 adds an
+ * automatic partial-aggregation guard for it.
  */
 object CdcApply {
 
   final case class Options(
-      /** >1 enables the two-stage salted LWW aggregation inside the MERGE —
-        * use when single keys are genuinely hot (a key holding a large
-        * fraction of a batch). The default assumes key-level skew is mild
-        * (a hot *conversation* spreads over its turn_idx values); the salt
-        * stage doubles aggregation work when skew is absent. */
-      saltBuckets: Int = 1,
-      /** extra write-parallelism per bucket inside the MERGE. */
-      mergeSaltPartitions: Int = 4,
-      /** pre-aggregate the batch before the MERGE. Off by default: the
-        * MERGE's own LWW over cur∪batch already collapses in-batch
-        * duplicates in the same shuffle — a separate pre-dedup pass only
-        * pays off when batches carry heavy duplication and the table is
-        * much larger than the batch. */
-      preDedup: Boolean = false,
-      /** single-exchange sorted merge (see LakeTable.merge). */
-      sortedMerge: Boolean = true,
       /** merge-on-read: append LWW'd deltas instead of rewriting the base
         * each batch (O(batch) write amplification instead of O(table));
         * read-side LWW + periodic compaction resolve. The throughput mode
         * for sustained high-rate ingest. */
       mergeOnRead: Boolean = false,
-      /** compact when any bucket accumulates this many delta files. */
+      /** compact (on the table's maintenance thread, so it never stalls
+        * the ordered-commit loop) when any bucket accumulates this many
+        * delta files. */
       compactEvery: Int = 8,
       /** CLUSTERED compaction: rewrite buckets range-partitioned on
         * (bucket, key...) so each base file covers a contiguous key
@@ -59,10 +45,6 @@ object CdcApply {
         * (A/B-measured; see BASELINE.md) and only read-heavy tables
         * need it. */
       clusteredCompaction: Boolean = false,
-      /** run triggered compaction on the table's maintenance thread so it
-        * never stalls the ordered-commit loop (the streaming/pipelined
-        * default); false = inline, deterministic (tests). */
-      backgroundCompact: Boolean = true,
       /** batches in flight (write dispatched, commit outstanding) for
         * merge-on-read replay and the pipelined stream ([[CdcPipeline]]);
         * commits stay strictly ordered. >1 overlaps the driver's per-batch
@@ -88,13 +70,12 @@ object CdcApply {
   def deadLetters(events: DataFrame): DataFrame = events.filter(!validationFilter)
 
   /** Normalize a raw event batch to the table-write shape: public columns
-    * + (_lsn, _op). With `preDedup` also collapses to one max-lsn row per
-    * key; otherwise the MERGE's own LWW aggregation does that in the same
-    * shuffle as the table merge. */
-  def prepareBatch(events: DataFrame, opts: Options = Options()): DataFrame = {
+    * + (_lsn, _op). The table write's own LWW exchange collapses each key
+    * to its max-lsn row. */
+  def prepareBatch(events: DataFrame): DataFrame = {
     val hasTool = events.columns.contains("tool")
     val withTool = if (hasTool) events else events.withColumn("tool", lit(null).cast("string"))
-    val projected = withTool
+    withTool
       .filter(validationFilter)
       .select(
         col("conv_id").cast("string").as("conv_id"),
@@ -105,16 +86,15 @@ object CdcApply {
         col("ts").cast("timestamp").as("ts"),
         col("lsn").cast("long").as("_lsn"),
         col("op").cast("string").as("_op"))
-    if (opts.preDedup) lwwDedup(projected, Model.keyCols, opts.saltBuckets)
-    else projected
   }
 
-  /** LSN-ordered last-writer-wins per key. With `saltBuckets>1` runs the
-    * two-stage salted aggregation (north_star skew mitigation): stage 1
-    * reduces each (key, salt) group — splitting a hot key across reducers —
-    * stage 2 reduces the tiny per-salt winners. With skew-free data the
-    * extra stage is ~free because stage-1 output is one row per
-    * (key, salt). */
+  /** LSN-ordered last-writer-wins per key over an arbitrary frame (the
+    * table's read-side resolve and the `q_lww_dedup` query; the table write
+    * uses [[lwwDedupSorted]]). With `saltBuckets>1` runs the two-stage
+    * salted reduction: stage 1 reduces each (key, salt) group — splitting a
+    * hot key across reducers — stage 2 reduces the tiny per-salt winners.
+    * With skew-free data the extra stage is ~free because stage-1 output is
+    * one row per (key, salt). */
   def lwwDedup(df: DataFrame, keyCols: Seq[String], saltBuckets: Int): DataFrame = {
     val valueCols = df.columns.toSeq
     val key = keyCols.map(col)
@@ -131,9 +111,8 @@ object CdcApply {
     // cost of sorting every batch twice; this shape shuffles every row
     // once and sorts once — the winner at this workload's ~10–20% in-batch
     // duplication. A batch with EXTREME per-key duplication (one key
-    // re-delivered 10^4+ times) should pre-collapse with
-    // `Options.preDedup`/`saltBuckets` — the knobs that already exist for
-    // exactly that shape.
+    // re-delivered 10^4+ times) still shuffles every copy; the automatic
+    // partial-aggregation guard for that shape is ROADMAP direction 5.
     def reduceOnce(d: DataFrame, groupCols: Seq[Column]): DataFrame =
       d.repartition(groupCols: _*)
         .sortWithinPartitions(groupCols.map(_.asc) :+ col("_lsn").desc: _*)
@@ -148,9 +127,7 @@ object CdcApply {
   /** Single-exchange LWW dedup: repartition once by (partition expr,
     * salted key) — every row of a key lands in one task — then sort within
     * partitions by (key, lsn desc) and keep the first row per key in one
-    * streaming pass. Halves the shuffle volume vs groupBy+repartition
-    * (one exchange instead of two, no aggregation buffers) at the cost of
-    * a row-encoder round trip in the keep-first pass.
+    * streaming pass: one exchange, no aggregation buffers.
     *
     * `partitionExprs` rides along so the output partitioning satisfies a
     * downstream partitioned write (e.g. the lake bucket column). */
@@ -201,75 +178,31 @@ object CdcApply {
   }
 
   /** Apply one micro-batch into the table. Returns number of upsert rows
-    * applied (0 when the batch was already applied — idempotent). */
+    * applied (0 when the batch was already applied — idempotent).
+    * Merge-on-read appends the LWW'd batch as delta files; copy-on-write
+    * runs the table's one-job MERGE. Both are one Spark job, skew-salted by
+    * the previous batch's persisted bucket weights, and both take lineage
+    * from the parquet footers of the files they wrote. */
   def applyBatch(table: LakeTable, events: DataFrame, batchId: Long,
       opts: Options = Options()): Long = {
     val t0 = System.nanoTime()
     // idempotence short-circuit up front: a replayed batch id skips ALL
-    // work (dead-letter append, stats job, merge) — not just the commit
+    // work (dead-letter append, merge) — not just the commit
     if (table.currentSnapshot.applied(batchId)) return 0L
     opts.deadLetterDir.foreach(writeDeadLetters(events, batchId, _))
-    val prepared = prepareBatch(events, opts)
-    val batch = if (opts.preDedup)
-      prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else prepared
-    try {
+    val batch = prepareBatch(events)
+    val weights = table.currentSnapshot.bucketWeights
+    val statsOpt =
       if (opts.mergeOnRead) {
-        // ONE-job micro-batch: the append reads nothing and needs no
-        // pre-pass — lineage stats come from the parquet footers of the
-        // written delta files (exact under retries), and skew salting uses
-        // the previous batch's persisted weights (steady-state signal)
-        val statsOpt = table.appendDelta(batch, Model.keyCols, batchId,
-          saltPartitions = opts.mergeSaltPartitions,
-          bucketWeights = table.currentSnapshot.bucketWeights)
-        if (statsOpt.isDefined) maybeCompact(table, opts)
-        val durMs = (System.nanoTime() - t0) / 1000000
-        statsOpt.fold(0L) { stats =>
-          table.bufferLineage(batchId, stats, durMs)
-          stats.map(_._2).sum
-        }
-      } else {
-        // copy-on-write MERGE. Adaptive pre-pass: when the last batch
-        // touched most buckets (steady CDC state — every micro-batch fans
-        // out over the whole key space) the narrow stats job is a wasted
-        // serial pass, so the merge goes ONE-JOB whole-table; when batches
-        // are narrow, the stats pass keeps the rewrite to the few touched
-        // buckets. Lineage in one-job mode = rows per rewritten bucket
-        // (footer stats); in two-job mode = batch events per bucket.
-        val s0 = table.currentSnapshot
-        val touchedFrac =
-          if (s0.version == 0) 1.0
-          else s0.bucketWeights.size.toDouble / math.max(1, s0.numBuckets)
-        if (touchedFrac >= 0.5) {
-          val statsOpt = table.merge(batch, Model.keyCols, batchId,
-            saltPartitions = opts.mergeSaltPartitions,
-            affectedHint = None,
-            saltBuckets = opts.saltBuckets, sortedDedup = opts.sortedMerge,
-            bucketWeights = s0.bucketWeights)
-          val durMs = (System.nanoTime() - t0) / 1000000
-          statsOpt.fold(0L) { stats =>
-            table.bufferLineage(batchId, stats, durMs)
-            stats.map(_._2).sum
-          }
-        } else {
-          val stats = batch
-            .groupBy(table.bucketOf(col("conv_id")).as("bucket"))
-            .agg(count(lit(1)).as("n"), min("_lsn").as("lo"), max("_lsn").as("hi"))
-            .collect()
-            .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-          val applied = table.merge(batch, Model.keyCols, batchId,
-            saltPartitions = opts.mergeSaltPartitions,
-            affectedHint = Some(stats.map(_._1).toSet),
-            saltBuckets = opts.saltBuckets, sortedDedup = opts.sortedMerge,
-            bucketWeights = stats.map(s => s._1 -> s._2).toMap)
-          val durMs = (System.nanoTime() - t0) / 1000000
-          if (applied.isDefined) {
-            table.bufferLineage(batchId, stats, durMs)
-            stats.map(_._2).sum
-          } else 0L
-        }
-      }
-    } finally if (opts.preDedup) batch.unpersist(blocking = false)
+        val s = table.appendDelta(batch, Model.keyCols, batchId, bucketWeights = weights)
+        if (s.isDefined) maybeCompact(table, opts)
+        s
+      } else table.merge(batch, Model.keyCols, batchId, bucketWeights = weights)
+    val durMs = (System.nanoTime() - t0) / 1000000
+    statsOpt.fold(0L) { stats =>
+      table.bufferLineage(batchId, stats, durMs)
+      stats.map(_._2).sum
+    }
   }
 
   /** Batch replay: apply a sequence of log-segment directories in order,
@@ -296,15 +229,8 @@ object CdcApply {
       table.flushLineage()
     }
 
-  /** Compaction trigger shared by the apply paths: background by default
-    * (never stalls ordered commits), inline when the caller wants
-    * deterministic timing. */
+  /** Compaction trigger shared by the apply paths: runs on the table's
+    * maintenance thread, so it never stalls ordered commits. */
   private[cdc] def maybeCompact(table: LakeTable, opts: Options): Unit =
-    if (opts.backgroundCompact)
-      table.maybeCompactAsync(opts.compactEvery, opts.mergeSaltPartitions,
-        clustered = opts.clusteredCompaction)
-    else if (table.maxDeltaFiles >= opts.compactEvery)
-      // same leveling as the background path: fold only the deep buckets
-      table.compact(saltPartitions = opts.mergeSaltPartitions,
-        minDeltaFiles = opts.compactEvery, clustered = opts.clusteredCompaction)
+    table.maybeCompactAsync(opts.compactEvery, clustered = opts.clusteredCompaction)
 }

@@ -115,9 +115,8 @@ final class CdcPipeline(
       testWriteHook()
       val ev = spark.read.schema(Model.changeEventSchema).parquet(files: _*)
       opts.deadLetterDir.foreach(CdcApply.writeDeadLetters(ev, batchId, _))
-      val prepared = CdcApply.prepareBatch(ev, opts)
+      val prepared = CdcApply.prepareBatch(ev)
       val w = table.writeDeltaFiles(prepared, Model.keyCols,
-        saltPartitions = opts.mergeSaltPartitions,
         bucketWeights = table.currentSnapshot.bucketWeights)
       (w, (System.nanoTime() - t0) / 1000000)
     }))
@@ -249,7 +248,7 @@ object CdcPipeline {
       if (!table.currentSnapshot.applied(batchId)) {
         if (files.nonEmpty) {
           val ev = spark.read.schema(Model.changeEventSchema).parquet(files: _*)
-          CdcApply.applyBatch(table, ev, batchId, opts.copy(pipelineDepth = 1))
+          CdcApply.applyBatch(table, ev, batchId, opts)
           recovered += 1
         } else {
           // a planned-but-EMPTY journaled batch (the source logged no files)

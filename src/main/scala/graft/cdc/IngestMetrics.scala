@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
  * watermark over the change feed — the Structured Streaming surface of the
  * engine beyond foreachBatch (per-op counts and lsn ranges per window,
  * late events beyond the watermark dropped). Complements the per-batch
- * lineage rows (LakeTable.appendLineage) with event-time visibility.
+ * lineage rows (LakeTable.lineage) with event-time visibility.
  */
 object IngestMetrics {
 

@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, MapType, StructType}
 import org.apache.spark.sql.{GraftShim => EU}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,6 +31,18 @@ case class KeepFirstOfRunExpr(children: Seq[Expression])
     extends Expression with Nondeterministic {
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
+
+  // Keys must be atomic: both eval paths keep the previous key by
+  // reference (only UTF8String is cloned) and the interpreted path compares
+  // with `==`, so a sorter buffer reused behind an array/struct/map key
+  // could rewrite the stored key in place.
+  override def checkInputDataTypes(): TypeCheckResult =
+    children.map(_.dataType).collectFirst {
+      case t @ (_: ArrayType | _: StructType | _: MapType) => t
+    }.fold[TypeCheckResult](TypeCheckResult.TypeCheckSuccess) { t =>
+      TypeCheckResult.TypeCheckFailure(
+        s"keep_first_of_run needs atomic key columns, got ${t.catalogString}")
+    }
 
   @transient private var prev: Array[Any] = _
 

@@ -93,6 +93,10 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     v.get
   }
 
+  /** Write slices per bucket when no weight signal exists yet (at most
+    * one wave of tasks overall); see the salt plan in [[rewriteBuckets]]. */
+  private val saltPartitions = 4
+
   private val rootPath: Path = Paths.get(root)
   private val snapsDir: Path = rootPath.resolve("snapshots")
   private val latestPtr: Path = rootPath.resolve("_latest")
@@ -639,34 +643,25 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * schema evolution (folded into the same commit). Semantics = Iceberg
     * `MERGE INTO t USING b ON keys WHEN MATCHED AND b._lsn >= t._lsn THEN
     * UPDATE/DELETE WHEN NOT MATCHED THEN INSERT`, implemented as: read
-    * affected buckets → union old+new → keep max-_lsn row per key →
-    * rewrite those buckets only.
-    *
-    * `affectedHint = Some(buckets)`: rewrite exactly those buckets (caller
-    * learned them from a narrow stats pass — the right plan when a batch
-    * touches a small fraction of a large table).
-    * `affectedHint = None`: ONE-JOB whole-table merge — read every bucket
-    * that has data, union the batch, rewrite; buckets untouched by both
-    * stay as-is. The right plan when batches touch most buckets (steady
-    * CDC state), because it needs no pre-pass over the batch.
+    * ONE job over the whole table: read every bucket that has data (base
+    * ∪ outstanding deltas), union the batch, keep the max-_lsn row per key
+    * in one exchange, and rewrite; a bucket empty in both stays empty.
     *
     * Returns per-bucket (bucket, rowsWritten, lsnMin, lsnMax) footer stats
     * of the rewritten buckets, or None if `batchId` was already applied. */
   def merge(batch: DataFrame, keyCols: Seq[String], batchId: Long,
-      saltPartitions: Int = 0, affectedHint: Option[Set[Int]] = None,
-      saltBuckets: Int = 1, sortedDedup: Boolean = true,
       bucketWeights: Map[Int, Long] = Map.empty): Option[Seq[(Int, Long, Long, Long)]] = {
     val s0 = currentSnapshot
     if (s0.applied(batchId)) return None
     val nb = s0.numBuckets
 
     val (newCols, aligned) = alignTo(s0, batch)
-    // buckets to READ: the hint, or (one-job mode) every bucket with data.
-    // buckets to LIST post-write: hint, or all — a batch row landing in a
-    // previously-empty bucket creates that bucket's first (complete) file.
-    val readSet: Set[Int] = affectedHint.getOrElse(
-      (s0.files.filter(_._2.nonEmpty).keySet ++ s0.deltas.filter(_._2.nonEmpty).keySet))
-    val listSet: Set[Int] = affectedHint.getOrElse((0 until nb).toSet)
+    // buckets to READ: every bucket with data. Buckets to LIST post-write:
+    // all — a batch row landing in a previously-empty bucket creates that
+    // bucket's first (complete) file.
+    val readSet: Set[Int] =
+      s0.files.filter(_._2.nonEmpty).keySet ++ s0.deltas.filter(_._2.nonEmpty).keySet
+    val listSet: Set[Int] = (0 until nb).toSet
     // cur = base ∪ any outstanding merge-on-read deltas of those buckets
     // (folded into the rewrite, so the merge also acts as a compaction),
     // read under the evolved target schema so it unions with the aligned
@@ -678,8 +673,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       .withColumn("_bucket", bucketOfN(col(keyCols.head), nb))
 
     val all = cur.unionByName(aligned)
-    val newFiles = rewriteBuckets(all, listSet, keyCols, saltPartitions,
-      bucketWeights, sortedDedup, saltBuckets)
+    val newFiles = rewriteBuckets(all, listSet, keyCols, bucketWeights)
     val written = newFiles.filter(_._2.nonEmpty)
     val (stats, ranges) = footerStats(written)
     try commitLock.synchronized {
@@ -718,12 +712,11 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * is O(batch), not O(table) — the sustained-ingest mode for the
     * 10^10-event replay (read-side LWW + [[compact]] resolve). */
   def writeDeltaFiles(batch: DataFrame, keyCols: Seq[String],
-      saltPartitions: Int = 0,
       bucketWeights: Map[Int, Long] = Map.empty): DeltaWrite = {
     val s = currentSnapshot
     val (newCols, aligned) = alignTo(s, batch)
     val newFiles = rewriteBuckets(aligned, (0 until s.numBuckets).toSet, keyCols,
-      saltPartitions, bucketWeights, sortedDedup = true, saltBuckets = 1)
+      bucketWeights)
     val written = newFiles.filter(_._2.nonEmpty)
     // a failure here leaves no DeltaWrite for a caller to commit or abandon
     val (stats, ranges) =
@@ -769,10 +762,9 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   /** One-call MoR apply (write + commit); pipelined callers use the two
     * stages directly. Returns footer stats, or None if already applied. */
   def appendDelta(batch: DataFrame, keyCols: Seq[String], batchId: Long,
-      saltPartitions: Int = 0,
       bucketWeights: Map[Int, Long] = Map.empty): Option[Seq[(Int, Long, Long, Long)]] = {
     if (currentSnapshot.applied(batchId)) return None
-    val w = writeDeltaFiles(batch, keyCols, saltPartitions, bucketWeights)
+    val w = writeDeltaFiles(batch, keyCols, bucketWeights)
     if (commitDelta(batchId, w)) Some(w.stats) else None
   }
 
@@ -793,8 +785,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * readConv/readConvRange prune to O(1) files per bucket in the
     * compacted base; costs one extra range-sampling pass, which is why
     * it lives here, off the hot write path. */
-  def compact(saltPartitions: Int = 4,
-      dropTombstonesBelowLsn: Option[Long] = None,
+  def compact(dropTombstonesBelowLsn: Option[Long] = None,
       minDeltaFiles: Int = 1,
       clustered: Boolean = false): Unit = {
     val s = currentSnapshot
@@ -810,8 +801,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
         s.deltas.map { case (b, fs) => b -> (s.files.getOrElse(b, Nil) ++ fs) }),
         Some(affected))
       .withColumn("_bucket", bucketOfN(col(keyCols.head), s.numBuckets))
-    val newFiles = rewriteBuckets(all, affected, keyCols, saltPartitions,
-      Map.empty, sortedDedup = true, saltBuckets = 1,
+    val newFiles = rewriteBuckets(all, affected, keyCols, Map.empty,
       dropTombstonesBelowLsn = dropTombstonesBelowLsn, clustered = clustered)
     // footer IO stays OUTSIDE the commit lock — a background compaction
     // must never stall the ordered-commit loop on 100+ footer reads
@@ -868,8 +858,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   /** Queue one compaction if `maxDeltaFiles >= trigger` and none is already
     * queued/running (at-most-one in flight; the trigger re-fires on the
     * next apply if deltas are still deep). */
-  def maybeCompactAsync(trigger: Int, saltPartitions: Int = 4,
-      clustered: Boolean = false): Unit =
+  def maybeCompactAsync(trigger: Int, clustered: Boolean = false): Unit =
     if (maxDeltaFiles >= trigger && compactQueued.compareAndSet(false, true))
       maintenancePool.submit(new Runnable {
         def run(): Unit =
@@ -877,8 +866,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
           // background pass does O(deep buckets) work, not O(table), so
           // compaction cost stays bounded as the table grows (the 10^8
           // measurement showed whole-table folds dominating per-batch cost)
-          try compact(saltPartitions, minDeltaFiles = trigger,
-            clustered = clustered)
+          try compact(minDeltaFiles = trigger, clustered = clustered)
           catch {
             // a racing base rewrite won; the next trigger simply retries
             case _: java.util.ConcurrentModificationException => ()
@@ -906,13 +894,12 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * run this as maintenance when buckets outgrow the per-task sweet spot
     * (the 10^10-scale requirement; old snapshots remain readable because
     * reads go through per-snapshot file lists, never the hash). */
-  def rescale(newNumBuckets: Int, saltPartitions: Int = 4): Unit = {
+  def rescale(newNumBuckets: Int): Unit = {
     require(newNumBuckets > 0, "numBuckets must be positive")
     val s = currentSnapshot
     if (s.numBuckets == newNumBuckets) return
     val all = resolvedRaw(s).withColumn("_bucket", bucketOfN(col(keyCols.head), newNumBuckets))
-    val newFiles = rewriteBuckets(all, (0 until newNumBuckets).toSet, keyCols,
-      saltPartitions, Map.empty, sortedDedup = true, saltBuckets = 1)
+    val newFiles = rewriteBuckets(all, (0 until newNumBuckets).toSet, keyCols, Map.empty)
     val (_, ranges) = footerStats(newFiles.filter(_._2.nonEmpty)) // outside the lock
     try commitLock.synchronized {
       val s2 = currentSnapshot
@@ -950,8 +937,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * (targeted hot-conversation mitigation, north_star) — each slice costs
     * one parquet file, so only skewed buckets pay. */
   private def rewriteBuckets(all: DataFrame, affected: Set[Int],
-      keyCols: Seq[String], saltPartitions: Int,
-      bucketWeights: Map[Int, Long], sortedDedup: Boolean, saltBuckets: Int,
+      keyCols: Seq[String], bucketWeights: Map[Int, Long],
       dropTombstonesBelowLsn: Option[Long] = None,
       clustered: Boolean = false): Map[Int, Seq[String]] = {
     val commitId = UUID.randomUUID().toString.take(12)
@@ -961,9 +947,9 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     // Salt plan (hash path only — the clustered branch below range-
     // partitions on the keys themselves and touches none of this; lazy
     // keeps the clustered rewrite free of the dead driver-side work).
-    lazy val baseFactor = math.max(1, math.min(math.max(saltPartitions, 1),
+    lazy val baseFactor = math.max(1, math.min(saltPartitions,
       math.ceil(cores.toDouble / nAffected).toInt))
-    lazy val saltOf: Map[Int, Int] = if (bucketWeights.nonEmpty && saltPartitions > 0) {
+    lazy val saltOf: Map[Int, Int] = if (bucketWeights.nonEmpty) {
       // Weight-PROPORTIONAL slice allocation against a budget of one full
       // wave (T = cores): slices(b) ≈ weight(b)/totalW × T, so every slice
       // carries ≈ totalW/T rows REGARDLESS of bucket skew. The previous
@@ -1021,23 +1007,18 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     lazy val saltExpr =
       pmod(xxhash64(keyCols.map(col): _*), element_at(typedLit(saltOf), col("_bucket")))
 
-    // LWW in ONE pass. Default: single exchange by (bucket, salted key) +
-    // sort-within-partitions + streaming keep-first. Fallback: two-exchange
-    // groupBy max_by.
+    // LWW in ONE pass: single exchange by (bucket, salted key) +
+    // sort-within-partitions + streaming keep-first.
     val deduped =
-      if (sortedDedup && clustered)
+      if (clustered)
         // sort-ordered rewrite (Iceberg "sort" compaction strategy): range
         // partitions on (_bucket, key...) give every file a contiguous key
         // interval, so fileRanges become selective for point/interval reads
         graft.cdc.CdcApply.lwwDedupSorted(all, keyCols, Seq(col("_bucket")),
           math.max(cores, nAffected), byRange = true)
-      else if (sortedDedup) {
+      else {
         val pexprs = if (anySalt) Seq(col("_bucket"), saltExpr) else Seq(col("_bucket"))
         graft.cdc.CdcApply.lwwDedupSorted(all, keyCols, pexprs, totalParts)
-      } else {
-        val merged = graft.cdc.CdcApply.lwwDedup(all, keyCols, saltBuckets)
-        if (anySalt) merged.repartition(totalParts, col("_bucket"), saltExpr)
-        else merged.repartition(nAffected, col("_bucket"))
       }
     val writeDf = dropTombstonesBelowLsn match {
       case Some(w) => deduped.filter(!(col("_op") === "D" && col("_lsn") < w))
@@ -1186,10 +1167,6 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     }
     lineageBatches = 0
   }
-
-  /** Compat one-shot append (buffer + count one batch). */
-  def appendLineage(batchId: Long, perBucket: Seq[(Int, Long, Long, Long)],
-      durationMs: Long): Unit = bufferLineage(batchId, perBucket, durationMs)
 
   def lineage(): DataFrame = {
     flushLineage()

@@ -83,6 +83,23 @@ class PlanSpec extends SparkSpec {
       s"exactly one sort expected:\n$plan")
   }
 
+  test("keep_first_of_run: non-atomic keys fail analysis; (string, int) keys stay codegen'd") {
+    import spark.implicits._
+    import graft.functions.KeepFirst.keep_first_of_run
+    val df = Seq(("a", 1, 1L), ("a", 1, 2L), ("b", 1, 3L)).toDF("k", "i", "_lsn")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.filter(keep_first_of_run(struct(col("k"), col("i"))))
+    }
+    assert(e.getMessage.contains("struct<k:string,i:int>"), e.getMessage)
+    val out = df.repartition(col("k"), col("i"))
+      .sortWithinPartitions(col("k"), col("i"), col("_lsn").desc)
+      .filter(keep_first_of_run(col("k"), col("i")))
+    assert(out.select("_lsn").as[Long].collect().toSet == Set(2L, 3L))
+    val plan = executed(out)
+    assert("""\*\(\d+\) Filter keep_first_of_run""".r.findFirstIn(plan).isDefined,
+      s"keep_first_of_run not inside a codegen span:\n$plan")
+  }
+
   test("salted top-k-per-group: ≡ naive window, stage-1 parallelism > #groups") {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
       .select("o_orderpriority", "o_orderkey", "o_totalprice")

@@ -110,7 +110,7 @@ class CdcSpec extends SparkSpec {
       (3L, "I", "c2", 1, "user", "only")
     ).toDF("lsn", "op", "conv_id", "turn_idx", "role", "text")
       .withColumn("ts", org.apache.spark.sql.functions.current_timestamp())
-    val out = CdcApply.prepareBatch(df, CdcApply.Options(saltBuckets = 4, preDedup = true))
+    val out = CdcApply.lwwDedup(CdcApply.prepareBatch(df), Model.keyCols, 4)
       .select("conv_id", "turn_idx", "text").as[(String, Int, String)].collect().toSet
     assert(out == Set(("c1", 0, "new"), ("c2", 1, "only")))
   }
@@ -131,21 +131,6 @@ class CdcSpec extends SparkSpec {
     CdcApply.applyBatch(table, batch(Seq((30L, "I", "c1", 0, "user", "back"))), 3L)
     val rows = table.read().select("text").as[String].collect()
     assert(rows.toSeq == Seq("back"))
-  }
-
-  test("sorted single-exchange merge ≡ aggregate merge (same final state)") {
-    val cfg = ChangeLogGen.Config(numEvents = 8000, numConversations = 40, maxTurns = 12)
-    val logDir = tmpDir("ab-log")
-    val segments = ChangeLogGen.writeLog(spark, logDir, cfg, numSegments = 3)
-    def replay(sorted: Boolean): Map[(String, Int), (String, String)] = {
-      val table = new LakeTable(spark, tmpDir(s"ab-table-$sorted"), numBuckets = 4)
-      table.create(Model.transcriptSchema)
-      CdcApply.replay(spark, table, segments,
-        CdcApply.Options(sortedMerge = sorted, saltBuckets = if (sorted) 1 else 4))
-      table.read().collect()
-        .map(r => ((r.getString(0), r.getInt(1)), (r.getString(2), r.getString(3)))).toMap
-    }
-    assert(replay(sorted = true) == replay(sorted = false))
   }
 
   test("merge-on-read mode: replay equality, read-side resolution, compaction") {

@@ -57,9 +57,6 @@ class PropertySpec extends SparkSpec {
       // merge-on-read ≡ copy-on-write
       assert(applyAll(rows, 4, CdcApply.Options(mergeOnRead = true)) == base,
         s"seed=$seed: MoR mode")
-      // aggregate (unsorted) merge path ≡ sorted path
-      assert(applyAll(rows, 4, CdcApply.Options(sortedMerge = false, saltBuckets = 2)) == base,
-        s"seed=$seed: aggregate merge")
     }
   }
 

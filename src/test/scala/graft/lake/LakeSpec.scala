@@ -314,9 +314,12 @@ class LakeSpec extends SparkSpec {
     (0 until 4).foreach { i =>
       CdcApply.applyBatch(t2, mkBatch(i), i.toLong,
         CdcApply.Options(mergeOnRead = true, compactEvery = 2,
-          backgroundCompact = false, clusteredCompaction = true))
+          clusteredCompaction = true))
     }
+    t2.awaitMaintenance()
     assert(rows(t2.read()) == expect, "clustered auto-compaction preserves state")
+    assert(t2.currentSnapshot.files.values.flatten.nonEmpty,
+      "auto-compaction must have written base files")
     assert(t2.currentSnapshot.files.values.flatten
       .forall(t2.currentSnapshot.fileRanges.contains),
       "clustered base files carry key ranges")
