@@ -1,6 +1,6 @@
 package graft.cdc
 
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, LocalFs}
 import graft.model.Model
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -174,11 +174,15 @@ object CdcApply {
     // letters instead of duplicating them — the DLQ inherits the
     // pipeline's exactly-once (the `_batch_id=` layout reads back as a
     // partition column)
-    dl.write.mode("overwrite").parquet(s"$dir/_batch_id=$batchId")
+    dl.write.options(LocalFs.writeOptions).mode("overwrite").parquet(s"$dir/_batch_id=$batchId")
   }
 
-  /** Apply one micro-batch into the table. Returns number of upsert rows
-    * applied (0 when the batch was already applied — idempotent).
+  /** Apply one micro-batch into the table. Returns the rows written (0
+    * when the batch was already applied — idempotent): for merge-on-read
+    * the batch's LWW'd rows; for copy-on-write every row of the rewritten
+    * buckets — the merge rewrites every bucket holding data, so this is the
+    * table's post-merge row count, not the batch's event count (per-batch
+    * event counts are ROADMAP direction 2). Lineage records the same count.
     * Merge-on-read appends the LWW'd batch as delta files; copy-on-write
     * runs the table's one-job MERGE. Both are one Spark job, skew-salted by
     * the previous batch's persisted bucket weights, and both take lineage

@@ -1,5 +1,6 @@
 package graft.gen
 
+import graft.lake.LocalFs
 import graft.model.Model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -95,7 +96,7 @@ object ChangeLogGen {
       // micro-batch — write enough splits to feed every core
       events(spark, cfg, lo, hi, withToolCol = withTool)
         .repartition(filesPerSegment)
-        .write.mode("overwrite").parquet(seg)
+        .write.options(LocalFs.writeOptions).mode("overwrite").parquet(seg)
       seg
     }
   }

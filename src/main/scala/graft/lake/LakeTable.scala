@@ -725,11 +725,12 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   }
 
   /** Data-file writer with the table's file-size bound applied (see
-    * [[maxRecordsPerFile]]; 0 = Spark default, unbounded). */
-  private def boundedWriter(df: DataFrame) =
-    if (maxRecordsPerFile > 0)
-      df.write.option("maxRecordsPerFile", maxRecordsPerFile)
-    else df.write
+    * [[maxRecordsPerFile]]; 0 = Spark default, unbounded) and its `file://`
+    * IO routed through [[LocalFs]] (no `chmod` process per file). */
+  private def boundedWriter(df: DataFrame) = {
+    val w = df.write.options(LocalFs.writeOptions)
+    if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
+  }
 
   /** Merge-on-read stage 2: register the delta files + batch id (+ any
     * schema evolution) in ONE ordered commit. Returns false when the batch
@@ -1179,7 +1180,10 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   /** Per-micro-batch ingest metrics (north_star: "per-partition lineage
     * rows and ingest metrics emitted each micro-batch"): one row per
     * committed batch, aggregated from the per-(batch, bucket) lineage
-    * rows. Counts carry the footer-stats discipline — they come from the
+    * rows. `events` is the rows each batch WROTE: for a merge-on-read
+    * batch its LWW'd rows, for a copy-on-write batch every row of the
+    * buckets it rewrote (the table's post-merge row count, not the batch's
+    * events). Counts carry the footer-stats discipline — they come from the
     * parquet footers of the files each batch committed, so they are EXACT
     * under task retries and speculative execution (an accumulator-based
     * count would double-count retried tasks). Emitted by every apply path,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, LocalFs}
 import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{DataFrame, GraftShim, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow, Offset => OffsetV2}
@@ -291,7 +291,8 @@ object ChangeFeedSourceProvider {
       warnOnConflict: Boolean = true): Long = {
     val dir = new org.apache.hadoop.fs.Path(metadataPath)
     val file = new org.apache.hadoop.fs.Path(dir, "starting-version")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // LocalFs: on file:// the mkdirs/create below spawn no chmod processes
+    val fs = dir.getFileSystem(LocalFs.conf(spark.sparkContext.hadoopConfiguration))
     def readBack(): Long = {
       val in = fs.open(file)
       val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong

@@ -211,4 +211,22 @@ class CdcSpec extends SparkSpec {
     val cols = table.lineage().schema.fieldNames.toSet
     assert(Set("batch_id", "partition_id", "events", "lsn_min", "lsn_max", "duration_ms").subsetOf(cols))
   }
+
+  test("copy-on-write applyBatch counts the rows it wrote, not the batch's events") {
+    val table = new LakeTable(spark, tmpDir("graft-table-cow-rows"), numBuckets = 8)
+    table.create(Model.transcriptSchema)
+    val ts = org.apache.spark.sql.functions.current_timestamp()
+    val base = (0 until 100).map(i => (i.toLong, "I", f"c$i%02d", 0, "user", s"t$i"))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text").withColumn("ts", ts)
+    assert(CdcApply.applyBatch(table, base, 0L) == 100)
+    val update = Seq((1000L, "U", "c07", 0, "assistant", "edited"))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text").withColumn("ts", ts)
+    // the one-job merge rewrites every bucket holding data, so the count is
+    // the table's post-merge row count (ROADMAP direction 2 adds per-batch
+    // event counts as commit metrics)
+    assert(CdcApply.applyBatch(table, update, 1L) == 100)
+    assert(table.read().count() == 100)
+    val m = table.ingestMetrics().where("batch_id = 1").select("events").as[Long].collect()
+    assert(m.toSeq == Seq(100L))
+  }
 }
