@@ -124,30 +124,33 @@ object CdcApply {
     } else reduceOnce(df, key)
   }
 
-  /** Single-exchange LWW dedup: repartition once by (partition expr,
-    * salted key) — every row of a key lands in one task — then sort within
-    * partitions by (key, lsn desc) and keep the first row per key in one
-    * streaming pass: one exchange, no aggregation buffers.
+  /** Single-exchange LWW dedup: repartition once — every row of a key
+    * lands in one task — then sort within partitions by (partition exprs,
+    * key, lsn desc) and keep the first row per key in one streaming pass:
+    * one exchange, no aggregation buffers.
     *
-    * `partitionExprs` rides along so the output partitioning satisfies a
-    * downstream partitioned write (e.g. the lake bucket column). */
+    * `partitionExprs` lead the sort so the output ordering satisfies a
+    * downstream partitioned write (e.g. the lake bucket column).
+    * `partitionId` (an int in `[0, numPartitions)`, constant per key) sends
+    * each row to that partition verbatim (`Dataset.repartitionById`) — the
+    * table write's packing of salt slices into one wave of tasks. Without
+    * one the exchange RANGE-partitions on (partitionExprs, keyCols): each
+    * output partition (and so each written file) covers a CONTIGUOUS key
+    * interval, which is what makes per-file min/max skipping stats
+    * selective (clustered compaction). Equal key tuples land in one
+    * partition, so the keep-first LWW below is unaffected; volume balance
+    * comes from Spark's range sampling instead of the weight-proportional
+    * salt (a hot conversation still spreads, over its turn_idx order), at
+    * the cost of one extra sampling pass over the input — acceptable off
+    * the hot path, which is why only compaction clusters. */
   def lwwDedupSorted(df: DataFrame, keyCols: Seq[String],
       partitionExprs: Seq[Column], numPartitions: Int,
-      byRange: Boolean = false): DataFrame = {
-    // byRange: RANGE-partition on (partitionExprs, keyCols) instead of
-    // hash — each output partition (and so each written file) covers a
-    // CONTIGUOUS key interval, which is what makes per-file min/max
-    // skipping stats selective (clustered compaction). Equal key tuples
-    // land in one partition, so the keep-first LWW below is unaffected;
-    // volume balance comes from Spark's range sampling instead of the
-    // weight-proportional salt (a hot conversation still spreads, over
-    // its turn_idx order). Costs one extra sampling pass over the input
-    // — acceptable off the hot path, which is why the write path keeps
-    // hash salting and only compaction clusters.
-    val shuffled0 =
-      if (byRange)
+      partitionId: Option[Column] = None): DataFrame = {
+    val shuffled0 = partitionId match {
+      case Some(id) => df.repartitionById(numPartitions, id)
+      case None =>
         df.repartitionByRange(numPartitions, (partitionExprs ++ keyCols.map(col)): _*)
-      else df.repartition(numPartitions, partitionExprs: _*)
+    }
     val shuffled = shuffled0
       .sortWithinPartitions(
         partitionExprs.map(_.asc) ++ keyCols.map(col(_).asc) :+ col("_lsn").desc: _*)

@@ -113,7 +113,7 @@ final class CdcPipeline(
     writePool.execute(() => fut.complete(Try {
       val t0 = System.nanoTime()
       testWriteHook()
-      val ev = spark.read.schema(Model.changeEventSchema).parquet(files: _*)
+      val ev = GraftShim.knownParquetDf(spark, Model.changeEventSchema, files)
       opts.deadLetterDir.foreach(CdcApply.writeDeadLetters(ev, batchId, _))
       val prepared = CdcApply.prepareBatch(ev)
       val w = table.writeDeltaFiles(prepared, Model.keyCols,
@@ -247,7 +247,7 @@ object CdcPipeline {
     entries.foreach { case (batchId, files) =>
       if (!table.currentSnapshot.applied(batchId)) {
         if (files.nonEmpty) {
-          val ev = spark.read.schema(Model.changeEventSchema).parquet(files: _*)
+          val ev = GraftShim.knownParquetDf(spark, Model.changeEventSchema, files)
           CdcApply.applyBatch(table, ev, batchId, opts)
           recovered += 1
         } else {

@@ -426,13 +426,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * snapshots without a commit-kind record error likewise. */
   def readChangesSince(fromVersion: Long): DataFrame = {
     val cur = currentSnapshot
-    val paths = changeFilesBetween(fromVersion, cur.version)
-      .map(f => rootPath.resolve(f).toString)
-    val df =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur.schema)
-      else spark.read.schema(cur.schema).parquet(paths: _*)
-    df.select(changeSchema.fieldNames.map(col).toSeq: _*)
+    readFiles(cur.schema, changeFilesBetween(fromVersion, cur.version))
+      .select(changeSchema.fieldNames.map(col).toSeq: _*)
   }
 
   /** Shape of a change-feed row: the public columns plus `_lsn` (event
@@ -456,6 +451,18 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * that add no change events (compact/rescale/schema) yield empty lists.
     * One directory listing for the whole walk. */
   def changeFilesByVersion(fromVersion: Long, toVersion: Long): Seq[(Long, Seq[String])] = {
+    val added = Seq.newBuilder[(Long, Seq[String])]
+    walkChanges(fromVersion, toVersion)((v, files) => added += v -> files)
+    added.result()
+  }
+
+  /** The history walk behind [[changeFilesByVersion]] and
+    * [[changeInfoByVersion]]: hands `(v, files added by commit v)` to
+    * `each` as soon as version v is read, so a caller keeps everything the
+    * walk found before a version that fails it (a copy-on-write or legacy
+    * commit, an expired snapshot). */
+  private def walkChanges(fromVersion: Long, toVersion: Long)(
+      each: (Long, Seq[String]) => Unit): Unit = {
     val cur = currentSnapshot
     require(fromVersion >= 0 && fromVersion <= toVersion && toVersion <= cur.version,
       s"window ($fromVersion, $toVersion] out of range [0, ${cur.version}]")
@@ -467,44 +474,48 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     }.toMap
     def snap(v: Long): Snapshot = readSnapshot(byVersion.getOrElse(v,
       sys.error(s"no snapshot for version $v (expired or never committed)")))
-    var prev = snap(fromVersion)
-    val added = Seq.newBuilder[(Long, Seq[String])]
-    for (v <- fromVersion + 1 to toVersion) {
-      val s = snap(v)
-      s.op match {
-        case "ingest-delta" =>
-          added += v -> s.deltas.toSeq.flatMap { case (b, fs) =>
-            fs.diff(prev.deltas.getOrElse(b, Nil)) }
-        case "ingest-cow" =>
-          sys.error(s"change-feed walk: snapshot v$v is a copy-on-write " +
-            "ingest commit — change events are folded into rewritten base " +
-            "files and cannot be recovered from metadata; use merge-on-read " +
-            "apply for tables that feed incremental consumers")
-        case "compact" | "rescale" | "schema" | "init" => added += v -> Nil
-        case other =>
-          sys.error(s"change-feed walk: snapshot v$v carries no commit-kind " +
-            s"record ('$other') — history predates change-feed support")
+    try {
+      var prev = snap(fromVersion)
+      for (v <- fromVersion + 1 to toVersion) {
+        val s = snap(v)
+        s.op match {
+          case "ingest-delta" =>
+            each(v, s.deltas.toSeq.flatMap { case (b, fs) =>
+              fs.diff(prev.deltas.getOrElse(b, Nil)) })
+          case "ingest-cow" =>
+            sys.error(s"change-feed walk: snapshot v$v is a copy-on-write " +
+              "ingest commit — change events are folded into rewritten base " +
+              "files and cannot be recovered from metadata; use merge-on-read " +
+              "apply for tables that feed incremental consumers")
+          case "compact" | "rescale" | "schema" | "init" => each(v, Nil)
+          case other =>
+            sys.error(s"change-feed walk: snapshot v$v carries no commit-kind " +
+              s"record ('$other') — history predates change-feed support")
+        }
+        prev = s
       }
-      prev = s
+    } finally {
+      // the walk parsed O(window) historical manifests into the cache;
+      // restore the live-set bound (a polling reader never commits, so
+      // commit-time pruning alone would leak driver memory here)
+      pruneManifestCache(cur.manifestNames.values.toSet, cur.numBuckets)
     }
-    // the walk parsed O(window) historical manifests into the cache;
-    // restore the live-set bound (a polling reader never commits, so
-    // commit-time pruning alone would leak driver memory here)
-    pruneManifestCache(cur.manifestNames.values.toSet, cur.numBuckets)
-    added.result()
   }
 
   /** Per-commit `(version, exact change-event count, files added)` for
-    * `(fromVersion, toVersion]` — counts are parquet FOOTER reads over each
-    * commit's added files (footer-stats discipline: exact under task
-    * retries; no data pages touched). Feeds the change-feed source's
-    * row-based admission control; the caller is expected to cache
+    * `(fromVersion, toVersion]`, handed to `each` version by version as the
+    * walk reaches it (see [[walkChanges]]) — counts are parquet FOOTER
+    * reads over each commit's added files (footer-stats discipline: exact
+    * under task retries; no data pages touched). Feeds the change-feed
+    * source's row-based admission control; the caller is expected to cache
     * per-version results (files are immutable, so an entry never
     * changes). */
-  def changeInfoByVersion(fromVersion: Long, toVersion: Long): Seq[(Long, Long, Seq[String])] = {
+  def changeInfoByVersion(fromVersion: Long, toVersion: Long)(
+      each: (Long, Long, Seq[String]) => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    changeFilesByVersion(fromVersion, toVersion).map { case (v, files) =>
-      (v, files.map(f => ParquetStats.rowCount(rootPath.resolve(f).toString, conf)).sum, files)
+    walkChanges(fromVersion, toVersion) { (v, files) =>
+      each(v, files.map(f => ParquetStats.rowCount(rootPath.resolve(f).toString, conf)).sum,
+        files)
     }
   }
 
@@ -535,14 +546,9 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * `read().filter(conv_id = convId)`. */
   def readConv(convId: String): DataFrame = {
     val s = currentSnapshot
-    val paths = filesForConv(convId).map(f => rootPath.resolve(f).toString)
     val publicCols = s.schema.fields.map(_.name).filterNot(metaColNames.contains)
-    val df =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-      else spark.read.schema(s.schema).parquet(paths: _*)
-    graft.cdc.CdcApply.lwwDedup(
-        df.filter(col(keyCols.head) === convId), keyCols, 1)
+    val df = readFiles(s.schema, filesForConv(convId))
+    graft.cdc.CdcApply.lwwDedup(df.filter(col(keyCols.head) === convId), keyCols, 1)
       .filter(col("_op") =!= "D")
       .select(publicCols.map(col).toSeq: _*)
   }
@@ -555,12 +561,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * `read().filter(conv_id between lo and hi)`. */
   def readConvRange(lo: String, hi: String): DataFrame = {
     val s = currentSnapshot
-    val paths = filesForConvRange(lo, hi).map(f => rootPath.resolve(f).toString)
     val publicCols = s.schema.fields.map(_.name).filterNot(metaColNames.contains)
-    val df =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-      else spark.read.schema(s.schema).parquet(paths: _*)
+    val df = readFiles(s.schema, filesForConvRange(lo, hi))
     graft.cdc.CdcApply.lwwDedup(
         df.filter(col(keyCols.head) >= lo && col(keyCols.head) <= hi), keyCols, 1)
       .filter(col("_op") =!= "D")
@@ -607,16 +609,17 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   }
 
   private def readFileMapDf(s: Snapshot, m: Map[Int, Seq[String]],
-      buckets: Option[Set[Int]]): DataFrame = {
-    val paths = m
-      .filter { case (b, _) => buckets.forall(_.contains(b)) }
-      .values.flatten.map(f => rootPath.resolve(f).toString).toSeq
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    // explicit schema: older files simply lack evolved columns and read as
-    // null — additive schema evolution without rewriting history
-    else spark.read.schema(s.schema).parquet(paths: _*)
-  }
+      buckets: Option[Set[Int]]): DataFrame =
+    readFiles(s.schema, m.filter { case (b, _) => buckets.forall(_.contains(b)) }
+      .values.flatten.toSeq)
+
+  /** Scan of data files named by the manifest (paths relative to the root)
+    * under `schema` — no listing job (`GraftShim.knownParquetDf`). The
+    * explicit schema is what makes additive evolution free: older files
+    * simply lack evolved columns and read them as null. */
+  private def readFiles(schema: StructType, files: Seq[String]): DataFrame =
+    org.apache.spark.sql.GraftShim.knownParquetDf(spark, schema,
+      files.map(f => rootPath.resolve(f).toString))
 
   // ---- schema evolution --------------------------------------------------
 
@@ -932,25 +935,14 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     (newCols, aligned)
   }
 
-  /** LWW-dedup `all` and write it bucket-partitioned; returns new files per
-    * bucket. Salt plan: at least one task per core when few buckets are
-    * hit; buckets holding k× the average batch weight get ~k salt slices
-    * (targeted hot-conversation mitigation, north_star) — each slice costs
-    * one parquet file, so only skewed buckets pay. */
-  private def rewriteBuckets(all: DataFrame, affected: Set[Int],
-      keyCols: Seq[String], bucketWeights: Map[Int, Long],
-      dropTombstonesBelowLsn: Option[Long] = None,
-      clustered: Boolean = false): Map[Int, Seq[String]] = {
-    val commitId = UUID.randomUUID().toString.take(12)
-    val outDir = rootPath.resolve(s"data/commit-$commitId")
+  /** The salt plan of [[rewriteBuckets]]' hash path: write slices (= parquet
+    * files) per affected bucket, from the previous batch's bucket weights
+    * (the clustered rewrite range-partitions on the keys instead). */
+  private[lake] def slicePlan(affected: Set[Int],
+      bucketWeights: Map[Int, Long]): Map[Int, Int] = {
     val nAffected = math.max(affected.size, 1)
     val cores = spark.sparkContext.defaultParallelism
-    // Salt plan (hash path only — the clustered branch below range-
-    // partitions on the keys themselves and touches none of this; lazy
-    // keeps the clustered rewrite free of the dead driver-side work).
-    lazy val baseFactor = math.max(1, math.min(saltPartitions,
-      math.ceil(cores.toDouble / nAffected).toInt))
-    lazy val saltOf: Map[Int, Int] = if (bucketWeights.nonEmpty) {
+    if (bucketWeights.nonEmpty) {
       // Weight-PROPORTIONAL slice allocation against a budget of one full
       // wave (T = cores): slices(b) ≈ weight(b)/totalW × T, so every slice
       // carries ≈ totalW/T rows REGARDLESS of bucket skew. The previous
@@ -958,12 +950,13 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       // holding k× the average weight ran slices k/saltPartitions× the
       // mean task — the 4–7× straggler tail round 2's event-log analysis
       // measured. A bucket may now take up to the whole budget (a fully
-      // hot bucket spreads across all cores); each slice still costs one
+      // hot bucket spreads across all tasks); each slice still costs one
       // parquet file, and total files stay ≈ T + |affected|.
-      // One-wave budget. A/B-measured against T = 2×cores (finer slices,
-      // 2 waves): the finer plan LOST 30% throughput (1.07M → 748k ev/s at
-      // local[16], 16M MoR) — every extra slice is an extra parquet file
-      // whose footer-stat/commit/compaction cost exceeds the packing gain.
+      // One-wave budget of slices. A/B-measured (when each slice was still
+      // its own task) against T = 2×cores: the finer plan LOST 30%
+      // throughput (1.07M → 748k ev/s at local[16], 16M MoR) — every extra
+      // slice is an extra parquet file whose footer-stat/commit/compaction
+      // cost exceeds the packing gain.
       val totalW = math.max(1L,
         affected.toSeq.map(b => bucketWeights.getOrElse(b, 0L)).sum)
       // SCALE-ADAPTIVE budget (guide §2: partitioning must derive from the
@@ -980,7 +973,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       // O(affected buckets) files instead of O(cores).
       // Floor at cores/4: the weight signal is one batch OLD, so a burst
       // batch right after a trickle would otherwise be written with
-      // O(affected-buckets) tasks (e.g. a 10M-row catch-up batch on 2
+      // O(affected-buckets) slices (e.g. a 10M-row catch-up batch on 2
       // tasks). A quarter-wave floor bounds that transition commit to
       // ≤4× the ideal wall time while still cutting the tiny-batch file
       // count 4× — and the very next commit's weights re-adapt fully.
@@ -1002,24 +995,67 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       val extra = quotas.sortBy { case (b, q) => (-(q - base(b)), b) }
         .take(leftover).map(_._1).toSet
       base.map { case (b, n) => b -> (n + (if (extra.contains(b)) 1 else 0)) }
-    } else affected.map(_ -> baseFactor).toMap
-    lazy val totalParts = math.max(1, saltOf.values.sum)
-    lazy val anySalt = saltOf.values.exists(_ > 1)
-    lazy val saltExpr =
-      pmod(xxhash64(keyCols.map(col): _*), element_at(typedLit(saltOf), col("_bucket")))
+    } else {
+      val baseFactor = math.max(1, math.min(saltPartitions,
+        math.ceil(cores.toDouble / nAffected).toInt))
+      affected.map(_ -> baseFactor).toMap
+    }
+  }
 
-    // LWW in ONE pass: single exchange by (bucket, salted key) +
-    // sort-within-partitions + streaming keep-first.
+  /** LWW-dedup `all` and write it bucket-partitioned; returns new files per
+    * bucket. The salt plan sizes FILES: at least one slice per core when
+    * few buckets are hit; buckets holding k× the average batch weight get
+    * ~k slices (targeted hot-conversation mitigation, north_star) — each
+    * slice costs one parquet file, so only skewed buckets pay, and total
+    * files ≈ T + |affected|. TASKS are a separate budget: the slices are
+    * packed into at most one wave (`min(slices, cores)` tasks), each task
+    * writing one file per bucket it holds. */
+  private def rewriteBuckets(all: DataFrame, affected: Set[Int],
+      keyCols: Seq[String], bucketWeights: Map[Int, Long],
+      dropTombstonesBelowLsn: Option[Long] = None,
+      clustered: Boolean = false): Map[Int, Seq[String]] = {
+    val commitId = UUID.randomUUID().toString.take(12)
+    val outDir = rootPath.resolve(s"data/commit-$commitId")
+    val nAffected = math.max(affected.size, 1)
+    val cores = spark.sparkContext.defaultParallelism
+
+    // LWW in ONE pass: single exchange + sort-within-partitions + streaming
+    // keep-first.
     val deduped =
       if (clustered)
         // sort-ordered rewrite (Iceberg "sort" compaction strategy): range
         // partitions on (_bucket, key...) give every file a contiguous key
         // interval, so fileRanges become selective for point/interval reads
         graft.cdc.CdcApply.lwwDedupSorted(all, keyCols, Seq(col("_bucket")),
-          math.max(cores, nAffected), byRange = true)
+          math.max(cores, nAffected))
       else {
-        val pexprs = if (anySalt) Seq(col("_bucket"), saltExpr) else Seq(col("_bucket"))
-        graft.cdc.CdcApply.lwwDedupSorted(all, keyCols, pexprs, totalParts)
+        // Slices are files, tasks are a separate budget: every (bucket,
+        // slice) pair of the salt plan is a SLOT, numbered densely in
+        // bucket order, and slot s runs in task s mod nTasks with
+        // nTasks = min(slots, cores) — one wave however many slots, because
+        // every task pays a Hadoop-conf deserialization that a small
+        // batch's rows do not amortize. A key's rows share one slot (salt =
+        // key hash), so its run stays in one task; sorting by (_bucket,
+        // key…) keeps each task's buckets contiguous, so a task writes one
+        // file per bucket it holds and a bucket gets at most its slice
+        // count of files.
+        val saltOf = slicePlan(affected, bucketWeights)
+        val buckets = saltOf.toSeq.sortBy(_._1)
+        val firstSlot = buckets.map(_._1).zip(buckets.scanLeft(0)(_ + _._2)).toMap
+        val nTasks = math.min(math.max(1, saltOf.values.sum), cores)
+        val bucket = col("_bucket")
+        val slice =
+          if (saltOf.values.exists(_ > 1))
+            pmod(xxhash64(keyCols.map(col): _*), element_at(typedLit(saltOf), bucket))
+          else lit(0L)
+        // a row whose bucket has no slot is a planning bug: fail the job
+        // rather than let it land in some task's file set unplanned
+        val task = coalesce(((element_at(typedLit(firstSlot), bucket) + slice) % nTasks)
+            .cast("int"),
+          raise_error(concat(lit("rewriteBuckets: no write slot for _bucket="),
+            bucket.cast("string"))))
+        graft.cdc.CdcApply.lwwDedupSorted(all, keyCols, Seq(bucket), nTasks,
+          partitionId = Some(task))
       }
     val writeDf = dropTombstonesBelowLsn match {
       case Some(w) => deduped.filter(!(col("_op") === "D" && col("_lsn") < w))

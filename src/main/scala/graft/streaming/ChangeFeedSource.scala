@@ -145,18 +145,16 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
       val hi = math.min(v + rowWalkChunk - 1, hardEnd)
       // the prefetch window may reach past the versions that end up
       // admitted; a CoW/legacy commit AHEAD of the needed version must not
-      // fail planning of deliverable versions — retry with just the version
-      // actually asked for (if THAT fails, the failure is real)
-      try fillInfo(v - 1, hi)
-      catch { case _: Exception if hi > v => fillInfo(v - 1, v) }
+      // fail planning of deliverable versions. The walk caches each version
+      // as it reads it, so a failure past v keeps v and every version
+      // before the bad commit (the next admission steps are cache hits); a
+      // failure AT v is real and propagates
+      try table.changeInfoByVersion(v - 1, hi) { (ver, rows, files) =>
+        infoByVersion.put(ver, (rows, files))
+      } catch { case _: Exception if infoByVersion.containsKey(v) => () }
       infoByVersion.get(v)
     }
   }
-
-  private def fillInfo(lo: Long, hi: Long): Unit =
-    table.changeInfoByVersion(lo, hi).foreach { case (ver, rows, files) =>
-      infoByVersion.put(ver, (rows, files))
-    }
 
   /** Consumed versions never need their entries again (offsets only move
     * forward); without the prune a long tail would hold one entry per
@@ -193,7 +191,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
       }
     val paths = files.map(f =>
       java.nio.file.Paths.get(table.root).resolve(f).toString)
-    GraftShim.streamingParquetDf(spark, pinnedSchema, paths)
+    GraftShim.knownParquetDf(spark, pinnedSchema, paths, isStreaming = true)
   }
 
   /** Every offset this source mints or checkpoints is a version number:

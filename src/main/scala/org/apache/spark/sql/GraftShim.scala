@@ -42,23 +42,75 @@ object GraftShim {
     expand(df.queryExecution.executedPlan).map(_.nodeName)
   }
 
-  /** A parquet-backed DataFrame tagged `isStreaming = true` — what a V1
-    * streaming `Source.getBatch` must return (MicroBatchExecution asserts
-    * the flag). Spark's own FileStreamSource builds its batches exactly
-    * this way (resolve a file relation, wrap in a streaming
-    * LogicalRelation); `DataSource`/`LogicalRelation`/`Dataset.ofRows` are
-    * `private[sql]`, hence this in-package bridge. An empty `paths` yields
-    * an empty streaming batch of the same schema. */
-  def streamingParquetDf(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
-      paths: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
+  /** A parquet scan over files the caller already knows (a lake manifest,
+    * a change-feed window, a source log entry): the same rows and schema as
+    * `spark.read.schema(schema).parquet(paths: _*)`, but built WITHOUT
+    * listing. `DataFrameReader` resolves its paths through an
+    * `InMemoryFileIndex`, which above `parallelPartitionDiscovery.threshold`
+    * (32 paths) runs one Spark listing job — a task per path — just to stat
+    * files whose names are already known. Here the driver stats each file
+    * once through its Hadoop `FileSystem` and the relation reads from that
+    * fixed file list: no job, no partition inference, the same pattern as
+    * Delta's log-driven file index. A path may also name a flat directory
+    * (a change-log segment, `CdcApply.replay`'s batch input): its visible
+    * files are read, as `DataFrameReader` would; a subdirectory in it
+    * fails. A missing path fails here with `DataFrameReader`'s
+    * PATH_NOT_FOUND; an empty `paths` yields an empty scan of `schema`.
+    * `isStreaming` tags the plan as a V1 streaming `Source.getBatch` result
+    * (MicroBatchExecution asserts the flag). `HadoopFsRelation`/
+    * `LogicalRelation`/`Dataset.ofRows` are `private[sql]`, hence this
+    * in-package bridge. */
+  def knownParquetDf(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      paths: Seq[String], isStreaming: Boolean = false): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val cs = spark.asInstanceOf[classic.SparkSession]
-    val relation = DataSource(
-      sparkSession = cs,
-      paths = paths,
-      userSpecifiedSchema = Some(schema),
-      className = "parquet").resolveRelation(checkFilesExist = false)
-    classic.Dataset.ofRows(cs, LogicalRelation(relation, isStreaming = true))
+    val conf = cs.sparkContext.hadoopConfiguration
+    val statuses = paths.flatMap { path =>
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      val st = try fs.getFileStatus(p) catch {
+        case _: java.io.FileNotFoundException =>
+          throw errors.QueryCompilationErrors.dataPathNotExistError(path) }
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(p).toSeq.filter { f =>
+        // names starting with `_` or `.` are metadata, as in Spark's own listing
+        val name = f.getPath.getName
+        require(!f.isDirectory, s"knownParquetDf reads files or flat directories; $path " +
+          s"holds the subdirectory $name")
+        !name.startsWith("_") && !name.startsWith(".")
+      }
+    }
+    val relation = HadoopFsRelation(new KnownFilesIndex(statuses),
+      partitionSchema = new org.apache.spark.sql.types.StructType(),
+      dataSchema = schema.asNullable, // as DataSource.resolveRelation does
+      bucketSpec = None, fileFormat = new ParquetFileFormat(), options = Map.empty)(cs)
+    classic.Dataset.ofRows(cs, LogicalRelation(relation, isStreaming))
+  }
+
+  /** A `FileIndex` over a fixed list of parquet files (no partition
+    * columns, nothing to refresh). Equal by file paths, as
+    * `InMemoryFileIndex` is by root paths, so two scans of the same files
+    * are the same plan to the `CacheManager` and to exchange reuse. */
+  private final class KnownFilesIndex(statuses: Seq[org.apache.hadoop.fs.FileStatus])
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
+    override def rootPaths: Seq[org.apache.hadoop.fs.Path] = statuses.map(_.getPath)
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(catalyst.InternalRow.empty,
+        statuses.map(FileStatusWithMetadata(_))))
+    override def inputFiles: Array[String] = statuses.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = statuses.map(_.getLen).sum
+    override def partitionSchema: org.apache.spark.sql.types.StructType =
+      new org.apache.spark.sql.types.StructType()
+    override def equals(other: Any): Boolean = other match {
+      case k: KnownFilesIndex => rootPaths.toSet == k.rootPaths.toSet
+      case _ => false
+    }
+    override def hashCode(): Int = rootPaths.toSet.hashCode()
   }
 
   /** Release the storage behind a `localCheckpoint()`ed DataFrame — the

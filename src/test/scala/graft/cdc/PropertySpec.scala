@@ -83,11 +83,14 @@ class PropertySpec extends SparkSpec {
       .withColumn("_bucket", pmod(xxhash64(col("conv_id"), lit(42)), lit(4)).cast("int"))
     val expect = CdcApply.lwwDedup(df, Model.keyCols, 1)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(6)).toMap
-    for (byRange <- Seq(false, true)) {
+    // direct partition ids (the table write's slot packing) and range
+    // partitioning (clustered compaction)
+    val slot = pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(4)).cast("int")
+    for ((how, id) <- Seq("by id" -> Some(slot), "by range" -> None)) {
       val sorted = CdcApply.lwwDedupSorted(df, Model.keyCols, Seq(col("_bucket")), 4,
-        byRange = byRange)
+        partitionId = id)
       val got = sorted.collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(6)).toMap
-      assert(got == expect, s"byRange=$byRange: keep-first must pick the max-lsn row per key")
+      assert(got == expect, s"$how: keep-first must pick the max-lsn row per key")
       // the round-6 optimization: keep-first is a native codegen'd filter,
       // not a mapPartitions over external Rows — no object codec boundary
       val nodes = org.apache.spark.sql.GraftShim.livePhysicalNodeNames(sorted)

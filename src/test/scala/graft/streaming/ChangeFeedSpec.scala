@@ -5,6 +5,7 @@ import graft.cdc.CdcApply
 import graft.lake.LakeTable
 import graft.model.Model
 import org.apache.spark.sql.{DataFrame, GraftShim}
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField}
@@ -215,6 +216,39 @@ class ChangeFeedSpec extends SparkSpec {
       s"the CoW window head must fail with a diagnosis, got: ${chainMessages(e)}")
     assert(seen.size == 4 && Seq(1L, 2L, 3L, 4L).forall(seen.contains),
       s"every pre-CoW change must have been delivered before the failure, got $seen")
+  }
+
+  test("maxRowsPerTrigger: a CoW commit inside the prefetch chunk keeps the walk done before it") {
+    val walks = new java.util.concurrent.atomic.AtomicInteger
+    val table = new LakeTable(spark, tmpDir("cfs-chunk"), numBuckets = 2) {
+      override def changeInfoByVersion(from: Long, to: Long)(
+          each: (Long, Long, Seq[String]) => Unit): Unit = {
+        walks.incrementAndGet()
+        super.changeInfoByVersion(from, to)(each)
+      }
+    }
+    table.create(Model.transcriptSchema)
+    // v1..v5 merge-on-read, v6 copy-on-write, v7..v8 merge-on-read: one
+    // 64-version prefetch chunk spans the CoW commit
+    (0 until 5).foreach { i =>
+      CdcApply.applyBatch(table, cfBatch(Seq((2L * i + 1, "I", s"c$i", 0, "user", "a"),
+        (2L * i + 2, "I", s"c$i", 1, "user", "b"))), i.toLong, mor)
+    }
+    CdcApply.applyBatch(table, cfBatch(Seq((11L, "U", "c0", 0, "user", "z"))), 5L) // CoW
+    (6 until 8).foreach { i =>
+      CdcApply.applyBatch(table, cfBatch(Seq((20L + i, "I", s"d$i", 0, "user", "a"))),
+        i.toLong, mor)
+    }
+    assert(table.currentVersion == 8)
+    val src = new ChangeFeedSource(spark, table, 0L, None, maxRowsPerTrigger = Some(1000L))
+    val end = src.latestOffset(null, src.getDefaultReadLimit)
+    assert(end == LongOffset(5L),
+      s"the window closes just before the CoW commit, got $end")
+    // one chunk walk that stops at v6 (v1..v5 kept), one walk that fails
+    // at v6 itself — not a re-walk per admitted version
+    assert(walks.get == 2, s"history walks for the admission: ${walks.get}")
+    src.getBatch(None, LongOffset(5L))
+    assert(walks.get == 2, "getBatch reuses the admission's per-version file lists")
   }
 
   test("crash between offset log and sink commit: batch-0 replay keeps its original window") {
