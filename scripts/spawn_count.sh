@@ -54,7 +54,7 @@ def frames(ev):
         yield m["type"]["name"].replace("/", ".") + "." + m["name"]
 
 bench = [p for p in sorted(glob.glob(f"{tmp}/jfr/*.jfr"))
-         if any("perfbench.Main" in e["values"].get("javaArguments", "")
+         if any("perfbench.Main" in (e["values"].get("javaArguments") or "")
                 for e in jfr(p, "jdk.JVMInformation"))]
 if not bench:
     sys.exit("no JFR recording of the benchmark JVM found")

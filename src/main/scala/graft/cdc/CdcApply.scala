@@ -185,7 +185,7 @@ object CdcApply {
     * the batch's LWW'd rows; for copy-on-write every row of the rewritten
     * buckets — the merge rewrites every bucket holding data, so this is the
     * table's post-merge row count, not the batch's event count (per-batch
-    * event counts are ROADMAP direction 2). Lineage records the same count.
+    * event counts are ROADMAP direction 3). Lineage records the same count.
     * Merge-on-read appends the LWW'd batch as delta files; copy-on-write
     * runs the table's one-job MERGE. Both are one Spark job, skew-salted by
     * the previous batch's persisted bucket weights, and both take lineage

@@ -38,14 +38,16 @@ object TextStats {
     n
   }
 
-  /** BPE-ish subword proxy: sum of ceil(tokenLen / 4) over tokens. */
+  /** BPE-ish subword proxy: sum of ceil(tokenLen / 4) over tokens, with
+    * tokenLen in code points (what Spark `length()` and the DuckDB oracle
+    * count), so a supplementary-plane character counts once, not twice. */
   def bpeishTokenCount(s: String): Int = {
     var n = 0; var i = 0; val len = s.length
     while (i < len) {
       while (i < len && isWs(s.charAt(i))) i += 1
       val start = i
       while (i < len && !isWs(s.charAt(i))) i += 1
-      if (i > start) n += (i - start + 3) / 4
+      if (i > start) n += (s.codePointCount(start, i) + 3) / 4
     }
     n
   }

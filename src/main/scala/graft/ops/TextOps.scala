@@ -32,7 +32,8 @@ object TextOps {
   def tokenCount(text: Column): Column = token_count(text)
 
   /** A BPE-ish subword proxy: count of character 4-grams per token summed,
-    * i.e. ceil(len/4) per token — integer arithmetic only. */
+    * i.e. ceil(len/4) per token with len in code points — integer
+    * arithmetic only. */
   def bpeishTokenCount(text: Column): Column = bpeish_token_count(text)
 
   /** Stopword hit count for a language's stopword list (exact token
@@ -49,7 +50,9 @@ object TextOps {
   /** N-gram-heuristic language id: argmax of per-language stopword hits,
     * ties broken by list order, "und" (undetermined) when all zero —
     * one tokenization pass for ALL language lists (the former fold of
-    * when-chains re-embedded every count subtree per comparison). */
+    * when-chains re-embedded every count subtree per comparison). NULL
+    * text gives NULL, not "und": the expression is null-intolerant, like
+    * Spark's own string functions; "" gives "und". */
   def langId(text: Column): Column = lang_id(text, langStopwords)
 
   /** Quality signals, all integers/booleans: char count, token count,

@@ -597,8 +597,7 @@ class LakeSpec extends SparkSpec {
       writer.write(f.newGroup().append("conv_id", emoji).append("_lsn", 300L + i)))
     writer.close()
     // fixture sanity: the file really has row groups whose minima DIFFER
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = ParquetStats.open(p.toString, conf)
     val mins = try reader.getFooter.getBlocks.asScala.map(b =>
         new String(b.getColumns.asScala.find(_.getPath.toDotString == "conv_id").get
           .getStatistics.getMinBytes, java.nio.charset.StandardCharsets.UTF_8))

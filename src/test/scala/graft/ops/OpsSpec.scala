@@ -199,6 +199,23 @@ class TextOpsSpec extends SparkSpec {
     assert(got(1L)._2 == "en")
   }
 
+  test("bpeish_token_count sizes tokens in code points, like Spark length()") {
+    // 5 code points (10 UTF-16 units): ceil(5/4) = 2, not ceil(10/4) = 3
+    assert(graft.functions.TextStats.bpeishTokenCount("😀😀😀😀😀") == 2)
+    val texts = Seq("😀😀😀😀😀", "abcd 😀 abcde\tx𝔸𝔹𝔺𝔻", "", "  plain ascii words  ")
+      .toDF("text")
+    val got = texts.select(TextOps.bpeishTokenCount($"text")).as[Int].collect().toSeq
+    val exp = texts.selectExpr("aggregate(filter(split(text, '\\\\s+'), t -> t != ''), 0, " +
+      "(acc, t) -> acc + CAST(ceil(length(t) / 4.0) AS INT))").as[Int].collect().toSeq
+    assert(got == exp && got.head == 2, s"got $got, Spark length() reference $exp")
+  }
+
+  test("lang_id: NULL text gives NULL, empty text gives und") {
+    val got = Seq(Some("der hund und die katze"), None, Some("")).toDF("text")
+      .select(TextOps.langId($"text")).as[Option[String]].collect().toSeq
+    assert(got == Seq(Some("de"), None, Some("und")))
+  }
+
   test("CC propagation runs ONE action per round (change count folded into the round job)") {
     // chain 1–3, 2–3: labels converge in 3 rounds (two propagation rounds
     // + the no-change detection round). Per-round cost contract: exactly
