@@ -175,11 +175,6 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * cached path). */
   def currentVersion: Long = currentSnapshot.version
 
-  private def readFileMap(node: JsonNode, field: String): Map[Int, Seq[String]] =
-    Option(node.get(field)).map(_.asInstanceOf[ObjectNode].properties().asScala.map { e =>
-      e.getKey.toInt -> e.getValue.asInstanceOf[ArrayNode].asScala.map(_.asText).toSeq
-    }.toMap).getOrElse(Map.empty)
-
   private def readRangeMap(node: JsonNode, field: String): Map[String, (String, String)] =
     Option(node.get(field)).map(_.asInstanceOf[ObjectNode]
       .properties().asScala.map { e =>
@@ -222,10 +217,11 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       manifestCache.keySet.asScala.filterNot(keep.contains)
         .foreach(manifestCache.remove)
 
-  /** Version encoded in a snapshot file name — `v%08d` zero-padded but
-    * parsed as the FULL leading digit run, so versions past 10^8 (a
-    * months-long commit history) widen the name instead of truncating;
-    * the digits end at '.' (current form) or '-' (legacy dashed form). */
+  /** Version encoded in a snapshot file name — `v%08d.json` zero-padded
+    * but parsed as the FULL leading digit run, so versions past 10^8 (a
+    * months-long commit history) widen the name instead of truncating.
+    * Widened names break lexicographic order: every ordering of snapshot
+    * files goes through this parse, never the name. */
   private def versionOfName(n: String): Option[Long] = {
     if (!n.startsWith("v")) return None
     val digits = n.drop(1).takeWhile(_.isDigit)
@@ -234,7 +230,6 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   }
 
   private def writeManifest(name: String, m: BucketManifest): Unit = {
-    Files.createDirectories(manifestsDir) // legacy tables predate the dir
     val node = mapper.createObjectNode()
     val fa = node.putArray("files"); m.files.foreach(fa.add)
     val da = node.putArray("deltas"); m.deltas.foreach(da.add)
@@ -248,44 +243,30 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     manifestCache.put(name, m)
   }
 
+  /** Parse a snapshot file. `manifests`, `appliedWatermark` and `op` are
+    * required: a snapshot lacking one is not a table this code wrote, and
+    * reading it as empty would silently lose files or applied batches. */
   private def readSnapshot(p: Path): Snapshot = {
     val node = mapper.readTree(LakeTable.readStringRaw(p))
+    def required(field: String): JsonNode = Option(node.get(field)).getOrElse(
+      throw new IllegalStateException(s"snapshot $p has no '$field' field"))
     val schema = DataType.fromJson(node.get("schema").asText).asInstanceOf[StructType]
     val nb = Option(node.get("numBuckets")).map(_.asInt).getOrElse(numBuckets)
     val weights = Option(node.get("bucketWeights")).map(_.asInstanceOf[ObjectNode]
       .properties().asScala.map(e => e.getKey.toInt -> e.getValue.asLong).toMap)
       .getOrElse(Map.empty[Int, Long])
-    val base = Option(node.get("manifests")) match {
-      case Some(mn) => // current format: per-bucket manifest references
-        val names = mn.asInstanceOf[ObjectNode].properties().asScala
-          .map(e => e.getKey.toInt -> e.getValue.asText).toMap
-        val ms = names.map { case (b, n) => b -> readManifest(n) }
-        Snapshot(node.get("version").asLong, schema,
-          ms.collect { case (b, m) if m.files.nonEmpty => b -> m.files },
-          -1L, Set.empty,
-          ms.collect { case (b, m) if m.deltas.nonEmpty => b -> m.deltas },
-          nb, weights,
-          ms.values.flatMap(_.ranges).toMap, names)
-      case None => // legacy inline format
-        Snapshot(node.get("version").asLong, schema,
-          readFileMap(node, "files"), -1L, Set.empty, readFileMap(node, "deltas"),
-          nb, weights, readRangeMap(node, "fileRanges"))
-    }
-    // commit kind ("" on legacy snapshots — readChangesSince rejects those)
-    val withOp = base.copy(op = Option(node.get("op")).map(_.asText).getOrElse(""))
-    // current format: watermark + exceptions; legacy format: full id array
-    Option(node.get("appliedWatermark")) match {
-      case Some(wm) =>
-        val exc = Option(node.get("appliedExceptions"))
-          .map(_.asInstanceOf[ArrayNode].asScala.map(_.asLong).toSet)
-          .getOrElse(Set.empty[Long])
-        withOp.copy(appliedWatermark = wm.asLong, appliedExceptions = exc)
-      case None =>
-        val legacy = Option(node.get("appliedBatchIds"))
-          .map(_.asInstanceOf[ArrayNode].asScala.map(_.asLong).toSet)
-          .getOrElse(Set.empty[Long])
-        legacy.toSeq.sorted.foldLeft(withOp)((s, id) => s.withApplied(id))
-    }
+    val names = required("manifests").asInstanceOf[ObjectNode].properties().asScala
+      .map(e => e.getKey.toInt -> e.getValue.asText).toMap
+    val ms = names.map { case (b, n) => b -> readManifest(n) }
+    val exc = Option(node.get("appliedExceptions"))
+      .map(_.asInstanceOf[ArrayNode].asScala.map(_.asLong).toSet)
+      .getOrElse(Set.empty[Long])
+    Snapshot(node.get("version").asLong, schema,
+      ms.collect { case (b, m) if m.files.nonEmpty => b -> m.files },
+      required("appliedWatermark").asLong, exc,
+      ms.collect { case (b, m) if m.deltas.nonEmpty => b -> m.deltas },
+      nb, weights,
+      ms.values.flatMap(_.ranges).toMap, names, required("op").asText)
   }
 
   private def commit(s0: Snapshot): Unit = commitLock.synchronized {
@@ -424,8 +405,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * snapshot retention (expired `fromVersion` errors, same as
     * [[readAt]]); `ingest-cow` commits rewrite base files wholesale, so
     * their events are not recoverable from file metadata — a CoW commit
-    * in the window errors rather than silently returning nothing; legacy
-    * snapshots without a commit-kind record error likewise. */
+    * in the window errors rather than silently returning nothing. */
   def readChangesSince(fromVersion: Long): DataFrame = {
     val cur = currentSnapshot
     readFiles(cur.schema, changeFilesBetween(fromVersion, cur.version))
@@ -461,8 +441,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   /** The history walk behind [[changeFilesByVersion]] and
     * [[changeInfoByVersion]]: hands `(v, files added by commit v)` to
     * `each` as soon as version v is read, so a caller keeps everything the
-    * walk found before a version that fails it (a copy-on-write or legacy
-    * commit, an expired snapshot). */
+    * walk found before a version that fails it (a copy-on-write commit,
+    * an expired snapshot). */
   private def walkChanges(fromVersion: Long, toVersion: Long)(
       each: (Long, Seq[String]) => Unit): Unit = {
     val cur = currentSnapshot
@@ -491,8 +471,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
               "apply for tables that feed incremental consumers")
           case "compact" | "rescale" | "schema" | "init" => each(v, Nil)
           case other =>
-            sys.error(s"change-feed walk: snapshot v$v carries no commit-kind " +
-              s"record ('$other') — history predates change-feed support")
+            sys.error(s"change-feed walk: snapshot v$v carries an unknown " +
+              s"commit kind '$other'")
         }
         prev = s
       }
@@ -526,7 +506,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * hash eliminates (numBuckets-1)/numBuckets of the table, the per-file
     * ranges eliminate files of the bucket whose batches never touched this
     * conversation (Iceberg manifest-stats pruning analog). Files without a
-    * recorded range (legacy snapshots) are conservatively kept. */
+    * recorded range (footer stats incomplete) are conservatively kept. */
   def filesForConv(convId: String): Seq[String] = {
     val s = currentSnapshot
     val b = bucketOfValue(convId, s.numBuckets)
@@ -1128,10 +1108,12 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     commitLock.synchronized {
       require(keep >= 1, "must keep at least the current snapshot")
       val current = LakeTable.readStringRaw(latestPtr).trim
+      // ordered by parsed version: names widen past 10^8, so name order
+      // would keep old snapshots; never expire the pointer target
       val all = listed(snapsDir)
         .filter(_.getFileName.toString.endsWith(".json"))
-        .sortBy(_.getFileName.toString)
-      // version prefix sorts lexicographically; never expire the pointer target
+        .flatMap(p => versionOfName(p.getFileName.toString).map(_ -> p))
+        .sortBy(_._1).map(_._2)
       val retained = (all.takeRight(keep).map(_.getFileName.toString) :+ current).toSet
       val retainedSnaps = all
         .filter(p => retained.contains(p.getFileName.toString))
@@ -1149,16 +1131,14 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       // serialized with this method by commitLock).
       val referencedManifests = retainedSnaps.flatMap(_.manifestNames.values).toSet
       val manifestCutoff = System.currentTimeMillis() - graceMs
-      if (Files.exists(manifestsDir)) {
-        listed(manifestsDir)
-          .filter(p => p.getFileName.toString.endsWith(".json"))
-          .filterNot(p => referencedManifests.contains(p.getFileName.toString))
-          .filter(p => Files.getLastModifiedTime(p).toMillis < manifestCutoff)
-          .foreach { p =>
-            manifestCache.remove(p.getFileName.toString)
-            Files.deleteIfExists(p)
-          }
-      }
+      listed(manifestsDir)
+        .filter(p => p.getFileName.toString.endsWith(".json"))
+        .filterNot(p => referencedManifests.contains(p.getFileName.toString))
+        .filter(p => Files.getLastModifiedTime(p).toMillis < manifestCutoff)
+        .foreach { p =>
+          manifestCache.remove(p.getFileName.toString)
+          Files.deleteIfExists(p)
+        }
       val cutoff = System.currentTimeMillis() - graceMs
       val dataDir = rootPath.resolve("data")
       if (Files.exists(dataDir)) {
@@ -1263,7 +1243,7 @@ object LakeTable {
       // per-file key-column (conv_id) min/max from the parquet footers —
       // the Iceberg-manifest-column-stats analog driving driver-side data
       // skipping on point/range reads; pruned to live files at each commit.
-      // A file without an entry (legacy snapshots) is simply never pruned.
+      // A file without an entry (footer stats incomplete) is never pruned.
       fileRanges: Map[String, (String, String)] = Map.empty,
       // bucket -> manifest file currently encoding that bucket's state
       // (bookkeeping for manifest reuse across commits; not itself
@@ -1271,10 +1251,10 @@ object LakeTable {
       // the post-commit value)
       manifestNames: Map[Int, String] = Map.empty,
       // what KIND of commit produced this snapshot ("ingest-delta",
-      // "ingest-cow", "compact", "rescale", "schema", "init"; "" on
-      // legacy snapshots) — the signal [[LakeTable.readChangesSince]]
-      // uses to tell ingest from maintenance when walking history
-      op: String = "") {
+      // "ingest-cow", "compact", "rescale", "schema", "init") — the signal
+      // [[LakeTable.readChangesSince]] uses to tell ingest from maintenance
+      // when walking history
+      op: String) {
 
     def applied(batchId: Long): Boolean =
       batchId <= appliedWatermark || appliedExceptions.contains(batchId)

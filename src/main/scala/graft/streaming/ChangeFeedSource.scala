@@ -108,7 +108,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
     * [[LakeTable.changeInfoByVersion]] footer sums, cached per version and
     * prefetched `rowWalkChunk` versions at a time so a far-behind consumer
     * doesn't pay one history walk per admission step. A walk error
-    * (CoW/legacy commit) past the FIRST row-carrying version closes the
+    * (CoW commit) past the FIRST row-carrying version closes the
     * window early: everything deliverable before the bad commit is
     * delivered, and the error re-fires loudly once that commit heads the
     * window. */
@@ -121,7 +121,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
         try infoOf(v + 1, hardEnd)._1
         catch {
           // early window closure is only the INTENDED behavior for the
-          // walk's own error shapes (CoW/legacy commit ahead); a transient
+          // walk's own error shapes (CoW commit ahead); a transient
           // infrastructure error (footer IO) must not be silently folded
           // into a shorter window, so say which error closed it
           case scala.util.control.NonFatal(e) if rows > 0 =>
@@ -144,7 +144,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
     else {
       val hi = math.min(v + rowWalkChunk - 1, hardEnd)
       // the prefetch window may reach past the versions that end up
-      // admitted; a CoW/legacy commit AHEAD of the needed version must not
+      // admitted; a CoW commit AHEAD of the needed version must not
       // fail planning of deliverable versions. The walk caches each version
       // as it reads it, so a failure past v keeps v and every version
       // before the bad commit (the next admission steps are cache hits); a

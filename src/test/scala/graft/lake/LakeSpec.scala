@@ -21,6 +21,28 @@ class LakeSpec extends SparkSpec {
     table.read().collect()
       .map(r => ((r.getString(0), r.getInt(1)), (r.getString(2), r.getString(3)))).toMap
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Snapshot `name` of the table at `dir`, as an editable JSON object. */
+  private def snapshotJson(dir: String, name: String) =
+    json.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "snapshots", name)))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+
+  /** Write `node` as snapshot `name` and point the table at it. */
+  private def publishSnapshot(dir: String, name: String,
+      node: com.fasterxml.jackson.databind.JsonNode): Unit = {
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "snapshots", name),
+      json.writeValueAsString(node))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_latest"), name)
+  }
+
+  /** Names of the JSON files in `dir/sub`. */
+  private def jsonFiles(dir: String, sub: String): Set[String] = {
+    val st = java.nio.file.Files.list(java.nio.file.Paths.get(dir, sub))
+    try st.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".json")).toSet
+    finally st.close()
+  }
+
   test("pipelined MoR replay: equals oracle, exactly-once, re-replay idempotent") {
     val cfg = ChangeLogGen.Config(numEvents = 16000, numConversations = 80, maxTurns = 16)
     val segments = ChangeLogGen.writeLog(spark, tmpDir("pipe-log"), cfg, numSegments = 6)
@@ -501,6 +523,35 @@ class LakeSpec extends SparkSpec {
     assert(table.readAt(0L).count() == 0, "version 0 is the empty table")
   }
 
+  test("expireSnapshots keeps the newest versions once snapshot names widen past 10^8") {
+    val dir = tmpDir("wide-table")
+    new LakeTable(spark, dir, numBuckets = 2).create(Model.transcriptSchema)
+    publishSnapshot(dir, "v99999998.json",
+      snapshotJson(dir, "v00000000.json").put("version", 99999998L))
+    val table = new LakeTable(spark, dir, numBuckets = 2)
+    (0L until 4L).foreach(i => table.commitDelta(i, LakeTable.DeltaWrite(Map.empty, Nil, Nil)))
+    assert(table.currentVersion == 100000002L)
+    table.expireSnapshots(keep = 2, graceMs = 0)
+    val left = jsonFiles(dir, "snapshots")
+    assert(left == Set("v100000001.json", "v100000002.json"), s"retained $left")
+    assert(table.readAt(100000001L).count() == 0)
+  }
+
+  test("a snapshot without manifests, appliedWatermark or op fails loudly, naming its file") {
+    val dir = tmpDir("strict-table")
+    new LakeTable(spark, dir, numBuckets = 2).create(Model.transcriptSchema)
+    Seq("manifests", "appliedWatermark", "op").foreach { field =>
+      val node = snapshotJson(dir, "v00000000.json")
+      node.remove(field)
+      publishSnapshot(dir, "v00000001.json", node)
+      val e = intercept[IllegalStateException] {
+        new LakeTable(spark, dir, numBuckets = 2).currentSnapshot
+      }
+      assert(e.getMessage.contains("v00000001.json") && e.getMessage.contains(s"'$field'"),
+        e.getMessage)
+    }
+  }
+
   test("commit is a version CAS: a racing writer's claimed version fails loudly") {
     val dir = tmpDir("cas-table")
     val a = new LakeTable(spark, dir, numBuckets = 2)
@@ -571,6 +622,25 @@ class LakeSpec extends SparkSpec {
     val a = table.currentSnapshot; val b = reopened.currentSnapshot
     assert(b.files == a.files && b.deltas == a.deltas && b.fileRanges == a.fileRanges)
     assert(b.appliedWatermark == 640L)
+
+    // expiry at depth: keep the newest 4 of 642 snapshots; manifests/ then
+    // holds exactly what those 4 reference, and a second pass is a no-op
+    table.expireSnapshots(keep = 4, graceMs = 0)
+    val snaps = jsonFiles(dir, "snapshots")
+    assert(snaps == (638 to 641).map(v => f"v$v%08d.json").toSet, s"retained $snaps")
+    val referenced = snaps.flatMap(n =>
+      snapshotJson(dir, n).get("manifests").properties().asScala.map(_.getValue.asText))
+    assert(jsonFiles(dir, "manifests") == referenced,
+      "manifests/ must hold exactly the retained snapshots' manifests")
+    table.expireSnapshots(keep = 4, graceMs = 0)
+    assert(jsonFiles(dir, "snapshots") == snaps && jsonFiles(dir, "manifests") == referenced,
+      "a second expiry must delete nothing")
+    val live = table.currentSnapshot
+    val cold = new LakeTable(spark, dir, numBuckets = 64).currentSnapshot
+    assert(cold.version == live.version && cold.files == live.files &&
+      cold.deltas == live.deltas && cold.fileRanges == live.fileRanges &&
+      cold.manifestNames == live.manifestNames &&
+      cold.appliedWatermark == live.appliedWatermark && cold.op == live.op)
   }
 
   test("fileStat merges MULTI-row-group key stats in unsigned UTF-8 byte order") {
