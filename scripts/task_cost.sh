@@ -6,14 +6,14 @@
 # benchmark's SparkSession picks up; perfbench itself is unchanged), then
 # reads the log's stage and task events and prints, per (stage call site,
 # task count):
-#   stages  tasks  deser_ms  deser_cpu_ms  run_ms
+#   stages  tasks  deser_ms  deser_ms/task  deser_cpu_ms  run_ms
 # where deser_* are the executors' task deserialization time and CPU time
 # (the task closure plus the broadcast Hadoop conf of a write job) and
-# run_ms the tasks' run time, summed over the stages. Rows are sorted by
-# deser_ms. The counts cover the whole JVM lifetime: session start, data
-# setup, warm-up and the timed window; the run's round count is printed
-# first, so per-round figures are the totals divided by it (setup and
-# warm-up included).
+# run_ms the tasks' run time, summed over the stages; deser_ms/task is
+# deser_ms over tasks. Rows are sorted by deser_ms. The counts cover the
+# whole JVM lifetime: session start, data setup, warm-up and the timed
+# window; the run's round count is printed first, so per-round figures are
+# the totals divided by it (setup and warm-up included).
 #
 # Usage: scripts/task_cost.sh <replay|queries> [seconds=15] [seed=1]
 set -eu
@@ -98,8 +98,9 @@ for sid, (n, d, c, run, sk) in per_stage.items():
 tot = [sum(r[i] for r in rows.values()) for i in range(5)]
 print(f"total: {tot[0]} stages, {tot[1]} tasks, deser {tot[2]:.0f} ms "
       f"(cpu {tot[3]:.0f} ms), run {tot[4]:.0f} ms")
-print(f"\n{'stages':>7} {'tasks':>7} {'deser_ms':>9} {'deser_cpu_ms':>12} {'run_ms':>8}  "
-      "kind    tasks/stage  call site")
+print(f"\n{'stages':>7} {'tasks':>7} {'deser_ms':>9} {'deser_ms/task':>13} {'deser_cpu_ms':>12} "
+      f"{'run_ms':>8}  kind    tasks/stage  call site")
 for (site, sk, n), r in sorted(rows.items(), key=lambda kv: -kv[1][2]):
-    print(f"{r[0]:7d} {r[1]:7d} {r[2]:9.0f} {r[3]:12.0f} {r[4]:8.0f}  {sk:6s} {n:12d}  {site}")
+    print(f"{r[0]:7d} {r[1]:7d} {r[2]:9.0f} {r[2] / r[1]:13.1f} {r[3]:12.0f} {r[4]:8.0f}  "
+          f"{sk:6s} {n:12d}  {site}")
 EOF

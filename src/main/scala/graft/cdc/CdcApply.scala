@@ -48,8 +48,8 @@ object CdcApply {
       /** batches in flight (write dispatched, commit outstanding) for
         * merge-on-read replay and the pipelined stream ([[CdcPipeline]]);
         * commits stay strictly ordered. >1 overlaps the driver's per-batch
-        * serial work (planning, snapshot IO, footer stats) with executor
-        * work; 1 means serial. */
+        * serial work (planning, job setup and commit, snapshot IO) with
+        * executor work; 1 means serial. */
       pipelineDepth: Int = 1,
       /** when set, rows failing validation are appended here (parquet,
         * partitioned by batch) instead of being silently dropped — the
@@ -189,7 +189,7 @@ object CdcApply {
     * Merge-on-read appends the LWW'd batch as delta files; copy-on-write
     * runs the table's one-job MERGE. Both are one Spark job, skew-salted by
     * the previous batch's persisted bucket weights, and both take lineage
-    * from the parquet footers of the files they wrote. */
+    * from the stats their write tasks counted for the files they wrote. */
   def applyBatch(table: LakeTable, events: DataFrame, batchId: Long,
       opts: Options = Options()): Long = {
     val t0 = System.nanoTime()

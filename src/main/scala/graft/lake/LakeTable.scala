@@ -40,10 +40,11 @@ import scala.jdk.CollectionConverters._
  *  - commit is write-new-snapshot-file + atomic rename of the `_latest`
  *    pointer — kill-during-commit leaves the old snapshot current and the
  *    orphan files unreachable;
- *  - per-batch stats (lineage + skew weights) come from the parquet
- *    footers of the files the batch just wrote — exact under task retries
+ *  - per-batch stats (lineage + skew weights) and per-file key ranges
+ *    come from the write tasks ([[FileStatsTracker]]): Spark reports only
+ *    committed task attempts' stats, so they are exact under task retries
  *    and speculative execution (an accumulator would double-count), and
- *    read driver-side without touching data pages;
+ *    the driver opens no footer and lists no directory after a write;
  *  - pipelined apply: [[writeDeltaFiles]] (a pure Spark job, runnable for
  *    several batches concurrently) is split from [[commitDelta]] (ordered,
  *    serialized) so the driver's per-batch serial work overlaps executor
@@ -81,9 +82,9 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   private var commitsSinceExpire = 0
 
   /** Minimum rows a write slice should carry before the salt plan spends
-    * an extra slice (= an extra parquet file + footer stat + commit-list
-    * entry) on it — the scale-adaptive cap on the one-wave slice budget
-    * (see the salt plan in [[rewriteBuckets]]). Parameterised
+    * an extra slice (= an extra parquet file + commit-list entry) on it —
+    * the scale-adaptive cap on the one-wave slice budget (see the salt
+    * plan in [[rewriteBuckets]]). Parameterised
     * (`spark.graft.minRowsPerSlice`); the local default keeps bench-scale
     * batches writing one slice per core, while a production deployment
     * targeting 128 MB–1 GB files sets it to the row count of such a file
@@ -112,6 +113,10 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * atomicity under thread interrupts (a `shutdownNow` during a pipelined
     * abort lands exactly here). */
   private[graft] var testMidCommitHook: () => Unit = () => ()
+
+  /** Test seam: sees every data write's per-file stats (paths relative to
+    * the root) before any commit uses them. */
+  private[lake] var testWriteHook: Seq[FileStat] => Unit = _ => ()
 
   /** Relative paths of files written but not yet resolved by a commit —
     * excluded from [[expireSnapshots]]' orphan GC no matter their age, so
@@ -506,16 +511,16 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * hash eliminates (numBuckets-1)/numBuckets of the table, the per-file
     * ranges eliminate files of the bucket whose batches never touched this
     * conversation (Iceberg manifest-stats pruning analog). Files without a
-    * recorded range (footer stats incomplete) are conservatively kept. */
+    * recorded range are conservatively kept. */
   def filesForConv(convId: String): Seq[String] = {
     val s = currentSnapshot
     val b = bucketOfValue(convId, s.numBuckets)
     (s.files.getOrElse(b, Nil) ++ s.deltas.getOrElse(b, Nil)).filter { f =>
       s.fileRanges.get(f).forall { case (lo, hi) =>
-        // parquet min/max are UNSIGNED-UTF-8-BYTE ordered; Java String
-        // (UTF-16 code unit) order disagrees beyond the BMP boundary, so
-        // compare in the stats' own order or a supplementary-plane key
-        // could be pruned from the file that holds it
+        // ranges are UNSIGNED-UTF-8-BYTE ordered (parquet's binary stats
+        // collation); Java String (UTF-16 code unit) order disagrees beyond
+        // the BMP boundary, so compare in the ranges' own order or a
+        // supplementary-plane key could be pruned from the file that holds it
         LakeTable.utf8Compare(lo, convId) <= 0 && LakeTable.utf8Compare(convId, hi) <= 0
       }
     }
@@ -632,7 +637,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * ∪ outstanding deltas), union the batch, keep the max-_lsn row per key
     * in one exchange, and rewrite; a bucket empty in both stays empty.
     *
-    * Returns per-bucket (bucket, rowsWritten, lsnMin, lsnMax) footer stats
+    * Returns per-bucket (bucket, rowsWritten, lsnMin, lsnMax) write stats
     * of the rewritten buckets, or None if `batchId` was already applied. */
   def merge(batch: DataFrame, keyCols: Seq[String], batchId: Long,
       bucketWeights: Map[Int, Long] = Map.empty): Option[Seq[(Int, Long, Long, Long)]] = {
@@ -641,9 +646,9 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     val nb = s0.numBuckets
 
     val (newCols, aligned) = alignTo(s0, batch)
-    // buckets to READ: every bucket with data. Buckets to LIST post-write:
-    // all — a batch row landing in a previously-empty bucket creates that
-    // bucket's first (complete) file.
+    // buckets to READ: every bucket with data. Buckets the rewrite
+    // replaces: all — a batch row landing in a previously-empty bucket
+    // creates that bucket's first (complete) file.
     val readSet: Set[Int] =
       s0.files.filter(_._2.nonEmpty).keySet ++ s0.deltas.filter(_._2.nonEmpty).keySet
     val listSet: Set[Int] = (0 until nb).toSet
@@ -658,9 +663,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       .withColumn("_bucket", bucketOfN(col(keyCols.head), nb))
 
     val all = cur.unionByName(aligned)
-    val newFiles = rewriteBuckets(all, listSet, keyCols, bucketWeights)
-    val written = newFiles.filter(_._2.nonEmpty)
-    val (stats, ranges) = footerStats(written)
+    val w = rewriteBuckets(all, listSet, keyCols, bucketWeights)
     try commitLock.synchronized {
       val s = currentSnapshot // re-read: another committer may have won since s0
       // Concurrent MoR deltas committed between our snapshot read and this
@@ -675,16 +678,16 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
         throw new java.util.ConcurrentModificationException(
           s"base files of affected buckets rewritten since merge read snapshot v${s0.version}")
       val schema2 = StructType(s.schema.fields ++ addedFields(s.schema, newCols))
-      val files2 = (s.files -- listSet) ++ written
+      val files2 = (s.files -- listSet) ++ w.files
       val foldedDeltas = s.deltas.map { case (b, fs) =>
         b -> (if (listSet.contains(b)) fs.diff(s0.deltas.getOrElse(b, Nil)) else fs)
       }.filter(_._2.nonEmpty)
       commit(s.copy(version = s.version + 1, schema = schema2, files = files2,
         deltas = foldedDeltas,
-        bucketWeights = stats.map(x => x._1 -> x._2).toMap,
-        fileRanges = s.fileRanges ++ ranges, op = "ingest-cow").withApplied(batchId))
-    } finally releasePending(newFiles) // referenced (or orphaned) either way
-    Some(stats)
+        bucketWeights = w.stats.map(x => x._1 -> x._2).toMap,
+        fileRanges = s.fileRanges ++ w.ranges, op = "ingest-cow").withApplied(batchId))
+    } finally releasePending(w.files) // referenced (or orphaned) either way
+    Some(w.stats)
   }
 
   // ---- merge-on-read apply (split write/commit for pipelining) ------------
@@ -700,21 +703,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       bucketWeights: Map[Int, Long] = Map.empty): DeltaWrite = {
     val s = currentSnapshot
     val (newCols, aligned) = alignTo(s, batch)
-    val newFiles = rewriteBuckets(aligned, (0 until s.numBuckets).toSet, keyCols,
-      bucketWeights)
-    val written = newFiles.filter(_._2.nonEmpty)
-    // a failure here leaves no DeltaWrite for a caller to commit or abandon
-    val (stats, ranges) =
-      try footerStats(written) catch { case t: Throwable => releasePending(written); throw t }
-    DeltaWrite(written, stats, newCols, ranges)
-  }
-
-  /** Data-file writer with the table's file-size bound applied (see
-    * [[maxRecordsPerFile]]; 0 = Spark default, unbounded) and its `file://`
-    * IO routed through [[LocalFs]] (no `chmod` process per file). */
-  private def boundedWriter(df: DataFrame) = {
-    val w = df.write.options(LocalFs.writeOptions)
-    if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w
+    rewriteBuckets(aligned, (0 until s.numBuckets).toSet, keyCols, bucketWeights)
+      .copy(newColumns = newCols)
   }
 
   /** Merge-on-read stage 2: register the delta files + batch id (+ any
@@ -746,7 +736,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   def abandonDelta(w: DeltaWrite): Unit = releasePending(w.files)
 
   /** One-call MoR apply (write + commit); pipelined callers use the two
-    * stages directly. Returns footer stats, or None if already applied. */
+    * stages directly. Returns write stats, or None if already applied. */
   def appendDelta(batch: DataFrame, keyCols: Seq[String], batchId: Long,
       bucketWeights: Map[Int, Long] = Map.empty): Option[Seq[(Int, Long, Long, Long)]] = {
     if (currentSnapshot.applied(batchId)) return None
@@ -787,11 +777,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
         s.deltas.map { case (b, fs) => b -> (s.files.getOrElse(b, Nil) ++ fs) }),
         Some(affected))
       .withColumn("_bucket", bucketOfN(col(keyCols.head), s.numBuckets))
-    val newFiles = rewriteBuckets(all, affected, keyCols, Map.empty,
+    val w = rewriteBuckets(all, affected, keyCols, Map.empty,
       dropTombstonesBelowLsn = dropTombstonesBelowLsn, clustered = clustered)
-    // footer IO stays OUTSIDE the commit lock — a background compaction
-    // must never stall the ordered-commit loop on 100+ footer reads
-    val (_, ranges) = footerStats(newFiles.filter(_._2.nonEmpty))
     try commitLock.synchronized {
       val s2 = currentSnapshot
       // same guard as merge(): a concurrent BASE rewrite of an affected
@@ -806,11 +793,11 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       val foldedDeltas = s2.deltas.map { case (b, fs) =>
         b -> (if (affected.contains(b)) fs.diff(s.deltas.getOrElse(b, Nil)) else fs)
       }.filter(_._2.nonEmpty)
-      val files2 = (s2.files -- affected) ++ newFiles.filter(_._2.nonEmpty)
+      val files2 = (s2.files -- affected) ++ w.files
       commit(s2.copy(version = s2.version + 1, files = files2,
-        deltas = foldedDeltas, fileRanges = s2.fileRanges ++ ranges,
+        deltas = foldedDeltas, fileRanges = s2.fileRanges ++ w.ranges,
         op = "compact"))
-    } finally releasePending(newFiles)
+    } finally releasePending(w.files)
   }
 
   /** Number of delta files outstanding for the most delta-laden bucket —
@@ -885,16 +872,15 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     val s = currentSnapshot
     if (s.numBuckets == newNumBuckets) return
     val all = resolvedRaw(s).withColumn("_bucket", bucketOfN(col(keyCols.head), newNumBuckets))
-    val newFiles = rewriteBuckets(all, (0 until newNumBuckets).toSet, keyCols, Map.empty)
-    val (_, ranges) = footerStats(newFiles.filter(_._2.nonEmpty)) // outside the lock
+    val w = rewriteBuckets(all, (0 until newNumBuckets).toSet, keyCols, Map.empty)
     try commitLock.synchronized {
       val s2 = currentSnapshot
       require(s2.version == s.version,
         "concurrent commit during rescale — run rescale quiesced")
       commit(s2.copy(version = s2.version + 1, numBuckets = newNumBuckets,
-        files = newFiles.filter(_._2.nonEmpty), deltas = Map.empty,
-        bucketWeights = Map.empty, fileRanges = ranges, op = "rescale"))
-    } finally releasePending(newFiles)
+        files = w.files, deltas = Map.empty,
+        bucketWeights = Map.empty, fileRanges = w.ranges, op = "rescale"))
+    } finally releasePending(w.files)
   }
 
   /** All rows (base ∪ deltas, pre-LWW) — rescale input; LWW happens in the
@@ -984,9 +970,11 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     }
   }
 
-  /** LWW-dedup `all` and write it bucket-partitioned; returns new files per
-    * bucket. The salt plan sizes FILES: at least one slice per core when
-    * few buckets are hit; buckets holding k× the average batch weight get
+  /** LWW-dedup `all` and write it bucket-partitioned; returns the written
+    * files per bucket with their stats, as counted by the write tasks, and
+    * registers the files pending until a commit resolves them. The salt
+    * plan sizes FILES: at least one slice per core when few buckets are
+    * hit; buckets holding k× the average batch weight get
     * ~k slices (targeted hot-conversation mitigation, north_star) — each
     * slice costs one parquet file, so only skewed buckets pay, and total
     * files ≈ T + |affected|. TASKS are a separate budget: the slices are
@@ -995,7 +983,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   private def rewriteBuckets(all: DataFrame, affected: Set[Int],
       keyCols: Seq[String], bucketWeights: Map[Int, Long],
       dropTombstonesBelowLsn: Option[Long] = None,
-      clustered: Boolean = false): Map[Int, Seq[String]] = {
+      clustered: Boolean = false): DeltaWrite = {
     val commitId = UUID.randomUUID().toString.take(12)
     val outDir = rootPath.resolve(s"data/commit-$commitId")
     val nAffected = math.max(affected.size, 1)
@@ -1043,54 +1031,20 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       case Some(w) => deduped.filter(!(col("_op") === "D" && col("_lsn") < w))
       case None => deduped
     }
-    boundedWriter(writeDf).partitionBy("_bucket").mode("overwrite").parquet(outDir.toString)
-    listFiles(outDir, affected)
-  }
-
-  private def listFiles(outDir: Path, buckets: Set[Int]): Map[Int, Seq[String]] = {
-    val m = buckets.map { b =>
-      val d = outDir.resolve(s"_bucket=$b")
-      val fs = if (Files.exists(d))
-        listed(d)
-          .filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .map(p => rootPath.relativize(p).toString)
-      else Seq.empty[String]
-      b -> fs
-    }.toMap
-    registerPending(m) // pending until the owning commit resolves
-    m
-  }
-
-  /** Exact per-bucket (rows, lsnMin, lsnMax) AND per-file key ranges from
-    * the parquet footers of freshly written files — no data pages read,
-    * correct under task retries/speculation (unlike accumulators). Footers
-    * are read in parallel: a salted batch writes O(buckets × slices) small
-    * files at ~0.4–0.7 ms per footer (one thread, 4 vCPU), so a serial
-    * loop over a 32-bucket write adds ~15–25 ms per batch. */
-  private def footerStats(written: Map[Int, Seq[String]])
-      : (Seq[(Int, Long, Long, Long)], Map[String, (String, String)]) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val key = keyCols.head
-    val perFile: Map[String, ParquetStats.FileStat] =
-      written.values.flatten.toSeq.asJava.parallelStream()
-        .map[(String, ParquetStats.FileStat)](f =>
-          f -> ParquetStats.fileStat(rootPath.resolve(f).toString, key, conf))
-        .collect(java.util.stream.Collectors.toList[(String, ParquetStats.FileStat)])
-        .asScala.toMap
-    val stats = written.toSeq.map { case (b, fs) =>
-      val per = fs.map(perFile)
-      val rows = per.map(_.rows).sum
-      val los = per.flatMap(_.lsnMin)
-      val his = per.flatMap(_.lsnMax)
-      (b, rows,
-        if (los.isEmpty) 0L else los.min,
-        if (his.isEmpty) 0L else his.max)
-    }.filter(_._2 > 0)
-    val ranges = perFile.collect {
-      case (f, st) if st.convMin.isDefined && st.convMax.isDefined =>
-        f -> (st.convMin.get, st.convMax.get)
-    }
-    (stats, ranges)
+    // the file-size bound (see [[maxRecordsPerFile]]; 0 = unbounded), and
+    // `file://` IO through [[LocalFs]] (no `chmod` process per file)
+    val options = LocalFs.writeOptions ++
+      (if (maxRecordsPerFile > 0) Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)
+       else Map.empty)
+    val tracker = new FileStatsTracker(
+      StructType(writeDf.schema.filterNot(_.name == "_bucket")), keyCols.head)
+    org.apache.spark.sql.GraftShim.writeFiles(writeDf, outDir.toString, "_bucket", options,
+      tracker)
+    val files = tracker.files.map(f => f.copy(path = s"data/commit-$commitId/${f.path}"))
+    testWriteHook(files)
+    val w = deltaWrite(files)
+    registerPending(w.files) // pending until the owning commit resolves
+    w
   }
 
   // ---- snapshot expiry / orphan GC ----------------------------------------
@@ -1201,10 +1155,10 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * rows. `events` is the rows each batch WROTE: for a merge-on-read
     * batch its LWW'd rows, for a copy-on-write batch every row of the
     * buckets it rewrote (the table's post-merge row count, not the batch's
-    * events). Counts carry the footer-stats discipline — they come from the
-    * parquet footers of the files each batch committed, so they are EXACT
-    * under task retries and speculative execution (an accumulator-based
-    * count would double-count retried tasks). Emitted by every apply path,
+    * events). Counts come from the committed task attempts' write stats
+    * of the files each batch committed, so they are EXACT under task
+    * retries and speculative execution (an accumulator-based count would
+    * double-count retried tasks). Emitted by every apply path,
     * including the pipelined Structured Streaming sink (CdcPipeline
     * buffers lineage at commit time). */
   def ingestMetrics(): DataFrame = {
@@ -1240,10 +1194,10 @@ object LakeTable {
       // signal feeding targeted salting (heuristic, persisted so the first
       // post-restart batch salts informed)
       bucketWeights: Map[Int, Long] = Map.empty,
-      // per-file key-column (conv_id) min/max from the parquet footers —
+      // per-file key-column (conv_id) min/max, counted by the write tasks —
       // the Iceberg-manifest-column-stats analog driving driver-side data
       // skipping on point/range reads; pruned to live files at each commit.
-      // A file without an entry (footer stats incomplete) is never pruned.
+      // A file without an entry (no non-null key) is never pruned.
       fileRanges: Map[String, (String, String)] = Map.empty,
       // bucket -> manifest file currently encoding that bucket's state
       // (bookkeeping for manifest reuse across commits; not itself
@@ -1272,12 +1226,25 @@ object LakeTable {
   }
 
   /** Result of [[writeDeltaFiles]]: per-bucket files, exact per-bucket
-    * footer stats (rows, lsnMin, lsnMax), any new public columns the
+    * write stats (rows, lsnMin, lsnMax), any new public columns the
     * batch introduces (committed by [[commitDelta]]), and per-file key
     * ranges for data skipping. */
   final case class DeltaWrite(files: Map[Int, Seq[String]],
       stats: Seq[(Int, Long, Long, Long)], newColumns: Seq[StructField],
       ranges: Map[String, (String, String)] = Map.empty)
+
+  /** A write's per-file stats folded into per-bucket files and stats (rows,
+    * lsnMin, lsnMax; buckets with rows) and the per-file key ranges. */
+  private def deltaWrite(files: Seq[FileStat]): DeltaWrite = {
+    val byBucket = files.groupBy(_.bucket).toSeq.sortBy(_._1)
+    DeltaWrite(byBucket.map { case (b, fs) => b -> fs.map(_.path).sorted }.toMap,
+      byBucket.map { case (b, fs) =>
+        (b, fs.map(_.rows).sum, fs.flatMap(_.lsnMin).minOption.getOrElse(0L),
+          fs.flatMap(_.lsnMax).maxOption.getOrElse(0L))
+      }.filter(_._2 > 0),
+      Nil,
+      files.collect { case FileStat(_, p, _, _, _, Some(lo), Some(hi)) => p -> (lo, hi) }.toMap)
+  }
 
   /** One bucket's state as serialized in a per-bucket manifest file: base
     * files, outstanding delta files, and the per-file key ranges of both.
@@ -1329,9 +1296,8 @@ object LakeTable {
       graft.model.Model.metaCols)
 }
 
-/** Parquet footer statistics reader (row counts + `_lsn` and key-column
-  * min/max) — the exact, retry-proof source of per-batch apply stats and
-  * of the per-file key ranges the snapshot keeps for data skipping. */
+/** Parquet footer reads: exact row counts for the change feed's
+  * row-based admission and `CdcStream`'s batch sizing. */
 object ParquetStats {
   import org.apache.parquet.HadoopReadOptions
   import org.apache.parquet.hadoop.ParquetFileReader
@@ -1347,56 +1313,6 @@ object ParquetStats {
     ParquetFileReader.open(
       HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf),
       HadoopReadOptions.builder(conf).build())
-
-  /** Footer stats of one freshly-written file. `convMin`/`convMax` are the
-    * key column's (UTF-8 binary) min/max when the footer carries them. */
-  final case class FileStat(rows: Long, lsnMin: Option[Long], lsnMax: Option[Long],
-      convMin: Option[String], convMax: Option[String])
-
-  def fileStat(path: String, keyCol: String,
-      conf: org.apache.hadoop.conf.Configuration): FileStat = {
-    val reader = open(path, conf)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      var rows = 0L
-      var lo: Option[Long] = None
-      var hi: Option[Long] = None
-      var cLo: Option[String] = None
-      var cHi: Option[String] = None
-      // If ANY data-bearing row group lacks usable key statistics, the file
-      // range must be dropped entirely (None = conservatively never pruned):
-      // a partial range covering only the stats-bearing groups would let
-      // filesForConv prune a file whose stats-less group holds the key.
-      var keyStatsIncomplete = false
-      blocks.foreach { blk =>
-        rows += blk.getRowCount
-        blk.getColumns.asScala.find(_.getPath.toDotString == "_lsn").foreach { c =>
-          val st = c.getStatistics
-          if (st != null && !st.isEmpty && st.hasNonNullValue) {
-            val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue
-            val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue
-            lo = Some(lo.fold(mn)(math.min(_, mn)))
-            hi = Some(hi.fold(mx)(math.max(_, mx)))
-          }
-        }
-        val keySt = blk.getColumns.asScala.find(_.getPath.toDotString == keyCol)
-          .map(_.getStatistics).orNull
-        if (keySt != null && !keySt.isEmpty && keySt.hasNonNullValue) {
-          val mn = new String(keySt.getMinBytes, java.nio.charset.StandardCharsets.UTF_8)
-          val mx = new String(keySt.getMaxBytes, java.nio.charset.StandardCharsets.UTF_8)
-          // block minima/maxima are UNSIGNED-UTF-8-BYTE ordered; Java
-          // String (UTF-16 code unit) `<` disagrees beyond the BMP, so a
-          // multi-row-group file with minima straddling that boundary
-          // would get a merged range WRONG in the stats' own collation and
-          // filesForConv could prune the very file holding the key
-          cLo = Some(cLo.fold(mn)(x => if (LakeTable.utf8Compare(mn, x) < 0) mn else x))
-          cHi = Some(cHi.fold(mx)(x => if (LakeTable.utf8Compare(mx, x) > 0) mx else x))
-        } else if (blk.getRowCount > 0) keyStatsIncomplete = true
-      }
-      if (keyStatsIncomplete) FileStat(rows, lo, hi, None, None)
-      else FileStat(rows, lo, hi, cLo, cHi)
-    } finally reader.close()
-  }
 
   /** Row count alone (footer only — no data pages). */
   def rowCount(path: String, conf: org.apache.hadoop.conf.Configuration): Long = {

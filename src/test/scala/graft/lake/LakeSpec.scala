@@ -643,67 +643,27 @@ class LakeSpec extends SparkSpec {
       cold.appliedWatermark == live.appliedWatermark && cold.op == live.op)
   }
 
-  test("fileStat merges MULTI-row-group key stats in unsigned UTF-8 byte order") {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-    import org.apache.parquet.schema.MessageTypeParser
-    // block minima straddle the BMP boundary: "aﬀ…" sorts AFTER "a🙂…" in
-    // UTF-16 code units but BEFORE it in UTF-8 bytes — a Java-String merge
-    // of per-block minima returns a range inverted in the stats' collation
-    val lig = "aﬀ" + ("x" * 24)
-    val emoji = "a🙂" + ("x" * 24)
-    val p = new org.apache.hadoop.fs.Path(tmpDir("mrg-stats") + "/multi.parquet")
-    val schema = MessageTypeParser.parseMessageType(
-      "message m { required binary conv_id (UTF8); required int64 _lsn; }")
-    val conf = spark.sessionState.newHadoopConf()
-    GroupWriteSupport.setSchema(schema, conf)
-    val writer = ExampleParquetWriter.builder(p).withConf(conf)
-      .withRowGroupSize(1024L).withPageSize(256).withDictionaryEncoding(false)
-      .build()
-    val f = new SimpleGroupFactory(schema)
-    (0 until 300).foreach(i =>
-      writer.write(f.newGroup().append("conv_id", lig).append("_lsn", i.toLong)))
-    (0 until 300).foreach(i =>
-      writer.write(f.newGroup().append("conv_id", emoji).append("_lsn", 300L + i)))
-    writer.close()
-    // fixture sanity: the file really has row groups whose minima DIFFER
-    val reader = ParquetStats.open(p.toString, conf)
-    val mins = try reader.getFooter.getBlocks.asScala.map(b =>
-        new String(b.getColumns.asScala.find(_.getPath.toDotString == "conv_id").get
-          .getStatistics.getMinBytes, java.nio.charset.StandardCharsets.UTF_8))
-      finally reader.close()
-    assert(mins.distinct.size >= 2, s"fixture needs straddling row groups, got $mins")
-    val st = ParquetStats.fileStat(p.toString, "conv_id", conf)
-    assert(st.convMin.contains(lig) && st.convMax.contains(emoji),
-      s"merged range must follow UTF-8 byte order, got ${st.convMin} .. ${st.convMax}")
-  }
-
-  test("fileStat drops the range when any data-bearing row group lacks key stats") {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-    import org.apache.parquet.schema.MessageTypeParser
-    val p = new org.apache.hadoop.fs.Path(tmpDir("nostats") + "/partial.parquet")
-    val schema = MessageTypeParser.parseMessageType(
-      "message m { optional binary conv_id (UTF8); required int64 _lsn; }")
-    val conf = spark.sessionState.newHadoopConf()
-    GroupWriteSupport.setSchema(schema, conf)
-    val writer = ExampleParquetWriter.builder(p).withConf(conf)
-      .withRowGroupSize(1024L).withPageSize(256).withDictionaryEncoding(false)
-      .build()
-    val f = new SimpleGroupFactory(schema)
-    val v = "conv-" + ("y" * 30)
-    (0 until 300).foreach(i =>
-      writer.write(f.newGroup().append("conv_id", v).append("_lsn", i.toLong)))
-    // a later ALL-NULL-key group: its rows would be invisible to a range
-    // built from the stats-bearing groups — the file must opt out of
-    // pruning entirely (convMin/convMax = None → conservatively kept)
-    (0 until 300).foreach(i =>
-      writer.write(f.newGroup().append("_lsn", 300L + i)))
-    writer.close()
-    val st = ParquetStats.fileStat(p.toString, "conv_id", conf)
-    assert(st.rows == 600L)
-    assert(st.convMin.isEmpty && st.convMax.isEmpty,
-      s"partial key stats must yield no range, got ${st.convMin} .. ${st.convMax}")
+  test("write stats: null keys and lsns ignored, keys in UTF-8 byte order, no key means no range") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val tracker = new FileStatsTracker(
+      StructType(Seq(StructField("conv_id", StringType), StructField("_lsn", LongType))), "conv_id")
+    val task = tracker.newTaskInstance()
+    val attempt = "/t/data/commit-x/_temporary/0/_temporary/attempt_1"
+    def row(k: String, l: java.lang.Long) = InternalRow(UTF8String.fromString(k), l)
+    // "aﬀ…" sorts AFTER "a🙂…" in UTF-16 code units but BEFORE it in UTF-8
+    // bytes, the order of parquet's binary stats and of the range pruning
+    task.newFile(s"$attempt/_bucket=3/part-a.parquet")
+    Seq(row("a🙂x", 7L), row(null, 2L), row("aﬀx", null), row("b", 9L))
+      .foreach(task.newRow(s"$attempt/_bucket=3/part-a.parquet", _))
+    task.newFile(s"$attempt/_bucket=5/part-b.parquet")
+    Seq(row(null, null), row(null, 4L)).foreach(task.newRow(s"$attempt/_bucket=5/part-b.parquet", _))
+    assert(tracker.files.isEmpty, "no stats before the job commits")
+    tracker.processStats(Seq(task.getFinalStats(0L)), 0L)
+    assert(tracker.files == Seq(
+      FileStat(3, "_bucket=3/part-a.parquet", 4L, Some(2L), Some(9L), Some("aﬀx"), Some("b")),
+      FileStat(5, "_bucket=5/part-b.parquet", 2L, Some(4L), Some(4L), None, None)))
   }
 
   test("bucket weights persist in the snapshot (post-restart salting is informed)") {

@@ -173,6 +173,68 @@ class TaskCostSpec extends SparkSpec {
       .getBatch(None, LongOffset(t.currentVersion)))
   }
 
+  test("a table write ships the session's Hadoop conf without its per-key provenance") {
+    import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.io.{Text, WritableUtils}
+    import org.apache.hadoop.mapred.JobConf
+    import org.apache.hadoop.mapreduce.Job
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    def bytes(c: Configuration): Array[Byte] = {
+      val b = new ByteArrayOutputStream
+      val out = new DataOutputStream(b)
+      c.write(out)
+      out.flush()
+      b.toByteArray
+    }
+    def in(b: Array[Byte]) = new DataInputStream(new ByteArrayInputStream(b))
+    /** (keys, keys written with a source-name array) of `Configuration.write` bytes. */
+    def sourced(b: Array[Byte]): (Int, Int) = {
+      val d = in(b)
+      val n = WritableUtils.readVInt(d)
+      val withSources = (0 until n).count { _ =>
+        Text.readString(d); Text.readString(d)
+        WritableUtils.readCompressedStringArray(d) != null
+      }
+      (n, withSources)
+    }
+    def entries(c: Configuration): Map[String, String] =
+      c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+
+    val session = spark.sessionState.newHadoopConfWithOptions(LocalFs.writeOptions)
+    val shipped = GraftShim.plainConf(session)
+    // as a write task receives it: Spark's JobConf copy, written, read back
+    // into a Configuration(false) (SerializableConfiguration)
+    val back = new Configuration(false)
+    back.readFields(in(bytes(new JobConf(shipped))))
+    val expect = entries(new JobConf(session))
+    assert(expect.size > 1000, s"the session conf has ${expect.size} keys")
+    assert(entries(back) == expect)
+    assert(back.get("fs.file.impl") == classOf[LocalFs].getName)
+
+    // provenance: only for the keys the write job itself sets
+    val job = Job.getInstance(shipped)
+    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, Model.transcriptSchema)
+    val (n, withSources) = sourced(bytes(job.getConfiguration))
+    assert(n >= expect.size && withSources > 0 && withSources <= 30,
+      s"$withSources of $n keys shipped with source names")
+    // positive control: the session conf ships source names for every key
+    val (sn, sessionSources) = sourced(bytes(new JobConf(session)))
+    assert(sn == expect.size && sessionSources == sn, s"$sessionSources of $sn")
+  }
+
+  test("a table write refuses a frame not ordered by its bucket column (no hidden second sort)") {
+    val df = Seq(("c1", 1L, 1), ("c0", 2L, 0)).toDF("conv_id", "_lsn", "_bucket")
+    val stats = new FileStatsTracker(df.drop("_bucket").schema, "conv_id")
+    val e = intercept[IllegalArgumentException](
+      GraftShim.writeFiles(df, tmpDir("unsorted-write") + "/t", "_bucket", Map.empty, stats))
+    assert(e.getMessage.contains("ordered by _bucket"), e.getMessage)
+    GraftShim.writeFiles(df.sortWithinPartitions("_bucket"), tmpDir("sorted-write") + "/t",
+      "_bucket", Map.empty, stats)
+    assert(stats.files.map(f => (f.bucket, f.rows, f.keyMin)).sorted ==
+      Seq((0, 1L, Some("c0")), (1, 1L, Some("c1"))))
+  }
+
   /** Node names of a physical plan, adaptive wrappers expanded. */
   private def nodeNames(p: SparkPlan): Seq[String] = p match {
     case a: AdaptiveSparkPlanExec => nodeNames(a.executedPlan)
@@ -199,8 +261,7 @@ class TaskCostSpec extends SparkSpec {
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
     val qel = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand"))
-          plans.add(qe.executedPlan)
+        if (f == GraftShim.WriteExecutionName) plans.add(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(qel)
