@@ -643,6 +643,36 @@ class LakeSpec extends SparkSpec {
       cold.appliedWatermark == live.appliedWatermark && cold.op == live.op)
   }
 
+  test("fileStat merges MULTI-row-group key stats in unsigned UTF-8 byte order") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    // block minima straddle the BMP boundary: "aﬀ…" sorts AFTER "a🙂…" in
+    // UTF-16 code units but BEFORE it in UTF-8 bytes — a Java-String merge
+    // returns a range inverted in the stats' collation
+    val lig = "aﬀ" + ("x" * 24)
+    val emoji = "a🙂" + ("x" * 24)
+    assert(lig > emoji && LakeTable.utf8Compare(lig, emoji) < 0)
+    val df = spark.range(0, 600, 1, 1)
+      .select(when(col("id") < 300, lit(lig)).otherwise(lit(emoji)).as("conv_id"),
+        col("id").as("_lsn"), (col("id") / 1000).cast("int").as("_bucket")) // all 0, not foldable
+      .sortWithinPartitions("_bucket", "_lsn")
+    val stats = new FileStatsTracker(df.drop("_bucket").schema, "conv_id")
+    val out = tmpDir("mrg-stats") + "/t"
+    org.apache.spark.sql.GraftShim.writeFiles(df, out, "_bucket", Map(
+      "parquet.block.size" -> "1024", "parquet.page.size" -> "256",
+      "parquet.enable.dictionary" -> "false"), stats)
+    val Seq(st) = stats.files
+    // fixture sanity: the file really has row groups whose minima DIFFER
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = ParquetStats.open(s"$out/${st.path}", conf)
+    val mins = try reader.getFooter.getBlocks.asScala.map(b =>
+        new String(b.getColumns.asScala.find(_.getPath.toDotString == "conv_id").get
+          .getStatistics.getMinBytes, java.nio.charset.StandardCharsets.UTF_8))
+      finally reader.close()
+    assert(mins.distinct.size >= 2, s"fixture needs straddling row groups, got $mins")
+    assert(st.rows == 600L && st.keyMin.contains(lig) && st.keyMax.contains(emoji),
+      s"merged range must follow UTF-8 byte order, got ${st.keyMin} .. ${st.keyMax}")
+  }
+
   test("write stats: null keys and lsns ignored, keys in UTF-8 byte order, no key means no range") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
