@@ -16,14 +16,16 @@ import org.apache.spark.sql.functions._
  *     → LSN last-writer-wins per (conv_id, turn_idx)   (reference op 6 re-targeted)
  *     → LakeTable MERGE (reference op 10 re-targeted; idempotent per op 11)
  *
- * Config notes for 100 TB: the only shuffle per micro-batch is the LWW
- * exchange inside the table write — one repartition by (bucket, weight-
- * salted key), a sort within partitions and a streaming keep-first, which
- * feeds the bucket-partitioned parquet write directly. Everything upstream
- * (rule columns, validation filters) is narrow and whole-stage-codegen'd.
- * That exchange ships every row of a key, so a redelivery storm (one key
- * sent 10^5 times) is not bounded yet: ROADMAP direction 5 adds an
- * automatic partial-aggregation guard for it.
+ * Config notes for 100 TB: the LWW runs inside the table write as a sort
+ * within partitions and a streaming keep-first, which feed the
+ * bucket-partitioned parquet write directly; everything upstream (rule
+ * columns, validation filters) is narrow and whole-stage-codegen'd. A
+ * write of several tasks first repartitions by (bucket, weight-salted
+ * key), one exchange per micro-batch; a one-task write (a pipelined batch
+ * whose share of the cores is one task, see [[CdcPipeline]]) has no
+ * exchange and runs as one narrow stage. The exchange ships every row of a
+ * key, so a redelivery storm (one key sent 10^5 times) is not bounded yet:
+ * ROADMAP direction 5 adds an automatic partial-aggregation guard for it.
  */
 object CdcApply {
 
@@ -49,7 +51,14 @@ object CdcApply {
         * merge-on-read replay and the pipelined stream ([[CdcPipeline]]);
         * commits stay strictly ordered. >1 overlaps the driver's per-batch
         * serial work (planning, job setup and commit, snapshot IO) with
-        * executor work; 1 means serial. */
+        * executor work; 1 means serial. Each batch in flight writes with
+        * its share of the cores, `max(1, cores / pipelineDepth)` tasks; at
+        * depth ≥ cores that is one task, and the write runs as one narrow
+        * stage with no LWW exchange. TRADE: the share is fixed, so a batch
+        * that runs alone in a deep pipeline (the last segment of a replay,
+        * a lone stream batch) gets only `cores / pipelineDepth` tasks; in
+        * steady state `pipelineDepth` batches share the cores between
+        * them. */
       pipelineDepth: Int = 1,
       /** when set, rows failing validation are appended here (parquet,
         * partitioned by batch) instead of being silently dropped — the
@@ -127,7 +136,12 @@ object CdcApply {
   /** Single-exchange LWW dedup: repartition once — every row of a key
     * lands in one task — then sort within partitions by (partition exprs,
     * key, lsn desc) and keep the first row per key in one streaming pass:
-    * one exchange, no aggregation buffers.
+    * one exchange, no aggregation buffers. With `numPartitions == 1` the
+    * repartition is a `coalesce(1)` instead: one task holds every row, so
+    * the exchange would move nothing that the task does not already hold,
+    * and the whole LWW (scan → sort → keep-first → write) runs as one
+    * narrow stage — how a pipelined batch's one-task write runs (see
+    * [[CdcPipeline]]).
     *
     * `partitionExprs` lead the sort so the output ordering satisfies a
     * downstream partitioned write (e.g. the lake bucket column).
@@ -146,11 +160,13 @@ object CdcApply {
   def lwwDedupSorted(df: DataFrame, keyCols: Seq[String],
       partitionExprs: Seq[Column], numPartitions: Int,
       partitionId: Option[Column] = None): DataFrame = {
-    val shuffled0 = partitionId match {
-      case Some(id) => df.repartitionById(numPartitions, id)
-      case None =>
-        df.repartitionByRange(numPartitions, (partitionExprs ++ keyCols.map(col)): _*)
-    }
+    val shuffled0 =
+      if (numPartitions == 1) df.coalesce(1) // every row in one task already: no exchange
+      else partitionId match {
+        case Some(id) => df.repartitionById(numPartitions, id)
+        case None =>
+          df.repartitionByRange(numPartitions, (partitionExprs ++ keyCols.map(col)): _*)
+      }
     val shuffled = shuffled0
       .sortWithinPartitions(
         partitionExprs.map(_.asc) ++ keyCols.map(col(_).asc) :+ col("_lsn").desc: _*)

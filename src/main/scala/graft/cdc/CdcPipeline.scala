@@ -25,6 +25,16 @@ import scala.util.{Failure, Success, Try}
  * Compaction triggers onto the table's maintenance thread, never stalling
  * commits.
  *
+ * Batches in flight share the cores: each write gets
+ * `max(1, cores / pipelineDepth)` tasks, where a serial pipeline's write
+ * gets up to one wave. Every stage barrier, exchange re-plan and task
+ * launch is a fixed cost per batch, and `pipelineDepth` concurrent writes
+ * already fill the cores, so at depth ≥ cores a batch's LWW and delta
+ * write run as one narrow one-task stage, with no exchange
+ * ([[CdcApply.lwwDedupSorted]]). The synchronous fallback and
+ * [[CdcPipeline.recoverPending]] apply one batch at a time and keep the
+ * full wave.
+ *
  * Exactly-once across kill/restart: Structured Streaming's contract is
  * "re-deliver the one batch whose foreachBatch didn't complete" — with an
  * async sink, batches whose foreachBatch RETURNED but whose table commit
@@ -49,6 +59,8 @@ final class CdcPipeline(
   require(opts.pipelineDepth >= 1,
     s"pipelineDepth must be >= 1, got ${opts.pipelineDepth}")
   private val depth = opts.pipelineDepth
+  /** Write tasks per batch: this batch's share of the cores. */
+  private val writeTasks = math.max(1, spark.sparkContext.defaultParallelism / depth)
   private val writePool =
     Executors.newFixedThreadPool(depth, CdcPipeline.daemonFactory("cdc-pipe-write"))
   private val committer =
@@ -117,7 +129,7 @@ final class CdcPipeline(
       opts.deadLetterDir.foreach(CdcApply.writeDeadLetters(ev, batchId, _))
       val prepared = CdcApply.prepareBatch(ev)
       val w = table.writeDeltaFiles(prepared, Model.keyCols,
-        bucketWeights = table.currentSnapshot.bucketWeights)
+        bucketWeights = table.currentSnapshot.bucketWeights, maxTasks = writeTasks)
       (w, (System.nanoTime() - t0) / 1000000)
     }))
     committer.execute(() => commitOne(batchId))

@@ -2,7 +2,8 @@ package graft.gen
 
 import graft.lake.LocalFs
 import graft.model.Model
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -79,7 +80,10 @@ object ChangeLogGen {
 
   /** Write the log as ordered parquet segment files under `dir`. Segments
     * before the evolution point use the v1 schema (no `tool` column) —
-    * exercises evolve-then-apply. Returns segment paths in log order. */
+    * exercises evolve-then-apply. Returns segment paths in log order. Each
+    * segment directory is replaced (overwrite) and holds `filesPerSegment`
+    * files, written with the engine's provenance-free job conf
+    * (`GraftShim.writeFiles`). */
   def writeLog(spark: SparkSession, dir: String, cfg: Config, numSegments: Int,
       filesPerSegment: Int = 32): Seq[String] = {
     val evolveAt = (cfg.numEvents * cfg.evolveFrac).toLong
@@ -92,11 +96,13 @@ object ChangeLogGen {
     bounds.zipWithIndex.map { case ((lo, hi), i) =>
       val seg = f"$dir/segment-$i%05d"
       val withTool = lo >= evolveAt
-      // file count bounds the scan (and map-side LWW) parallelism of each
-      // micro-batch — write enough splits to feed every core
-      events(spark, cfg, lo, hi, withToolCol = withTool)
-        .repartition(filesPerSegment)
-        .write.options(LocalFs.writeOptions).mode("overwrite").parquet(seg)
+      // file count bounds the scan parallelism of a micro-batch whose
+      // write runs a full wave of tasks — write enough splits to feed
+      // every core
+      val path = new Path(seg)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+      GraftShim.writeFiles(events(spark, cfg, lo, hi, withToolCol = withTool)
+        .repartition(filesPerSegment), seg, None, LocalFs.writeOptions)
       seg
     }
   }

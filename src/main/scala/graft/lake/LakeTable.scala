@@ -698,13 +698,15 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * several batches' writes can run concurrently (the written files are
     * unreachable until their ordered [[commitDelta]]). Write amplification
     * is O(batch), not O(table) — the sustained-ingest mode for the
-    * 10^10-event replay (read-side LWW + [[compact]] resolve). */
+    * 10^10-event replay (read-side LWW + [[compact]] resolve).
+    * `maxTasks` caps the write's tasks below one wave: a pipeline running
+    * several writes at once gives each its share of the cores. */
   def writeDeltaFiles(batch: DataFrame, keyCols: Seq[String],
-      bucketWeights: Map[Int, Long] = Map.empty): DeltaWrite = {
+      bucketWeights: Map[Int, Long] = Map.empty, maxTasks: Int = Int.MaxValue): DeltaWrite = {
     val s = currentSnapshot
     val (newCols, aligned) = alignTo(s, batch)
-    rewriteBuckets(aligned, (0 until s.numBuckets).toSet, keyCols, bucketWeights)
-      .copy(newColumns = newCols)
+    rewriteBuckets(aligned, (0 until s.numBuckets).toSet, keyCols, bucketWeights,
+      maxTasks = maxTasks).copy(newColumns = newCols)
   }
 
   /** Merge-on-read stage 2: register the delta files + batch id (+ any
@@ -978,12 +980,12 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * ~k slices (targeted hot-conversation mitigation, north_star) — each
     * slice costs one parquet file, so only skewed buckets pay, and total
     * files ≈ T + |affected|. TASKS are a separate budget: the slices are
-    * packed into at most one wave (`min(slices, cores)` tasks), each task
-    * writing one file per bucket it holds. */
+    * packed into at most one wave (`min(slices, cores, maxTasks)` tasks),
+    * each task writing one file per bucket it holds. */
   private def rewriteBuckets(all: DataFrame, affected: Set[Int],
       keyCols: Seq[String], bucketWeights: Map[Int, Long],
       dropTombstonesBelowLsn: Option[Long] = None,
-      clustered: Boolean = false): DeltaWrite = {
+      clustered: Boolean = false, maxTasks: Int = Int.MaxValue): DeltaWrite = {
     val commitId = UUID.randomUUID().toString.take(12)
     val outDir = rootPath.resolve(s"data/commit-$commitId")
     val nAffected = math.max(affected.size, 1)
@@ -1002,17 +1004,18 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
         // Slices are files, tasks are a separate budget: every (bucket,
         // slice) pair of the salt plan is a SLOT, numbered densely in
         // bucket order, and slot s runs in task s mod nTasks with
-        // nTasks = min(slots, cores) — one wave however many slots, because
-        // every task pays a Hadoop-conf deserialization that a small
-        // batch's rows do not amortize. A key's rows share one slot (salt =
-        // key hash), so its run stays in one task; sorting by (_bucket,
-        // key…) keeps each task's buckets contiguous, so a task writes one
-        // file per bucket it holds and a bucket gets at most its slice
-        // count of files.
+        // nTasks = min(slots, cores, maxTasks) — at most one wave however
+        // many slots, because every task pays a Hadoop-conf
+        // deserialization that a small batch's rows do not amortize. A
+        // key's rows share one slot (salt = key hash), so its run stays in
+        // one task; sorting by (_bucket, key…) keeps each task's buckets
+        // contiguous, so a task writes one file per bucket it holds and a
+        // bucket gets at most its slice count of files. One task needs no
+        // exchange at all (lwwDedupSorted coalesces instead).
         val saltOf = slicePlan(affected, bucketWeights)
         val buckets = saltOf.toSeq.sortBy(_._1)
         val firstSlot = buckets.map(_._1).zip(buckets.scanLeft(0)(_ + _._2)).toMap
-        val nTasks = math.min(math.max(1, saltOf.values.sum), cores)
+        val nTasks = math.max(1, Seq(saltOf.values.sum, cores, maxTasks).min)
         val bucket = col("_bucket")
         val slice =
           if (saltOf.values.exists(_ > 1))
@@ -1038,7 +1041,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
        else Map.empty)
     val tracker = new FileStatsTracker(
       StructType(writeDf.schema.filterNot(_.name == "_bucket")), keyCols.head)
-    org.apache.spark.sql.GraftShim.writeFiles(writeDf, outDir.toString, "_bucket", options,
+    org.apache.spark.sql.GraftShim.writeFiles(writeDf, outDir.toString, Some("_bucket"), options,
       tracker)
     val files = tracker.files.map(f => f.copy(path = s"data/commit-$commitId/${f.path}"))
     testWriteHook(files)

@@ -144,12 +144,14 @@ object CurationPipeline {
     // OOM a modest driver just NAMING the cache (InMemoryRelation's
     // cachedName renders treeString). The propagation loop below
     // references the pair set 2× per round, so every downstream plan must
-    // be O(1) in plan size: localCheckpoint gives a LogicalRDD scan over
+    // be O(1) in plan size: persistTruncated gives a LogicalRDD scan over
     // the materialized INTERNAL rows — same truncation as the former
     // `.rdd` boundary without that path's per-row decode to external Row
     // objects and re-encode — and pins exactly one execution of the
-    // expensive derivation.
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    // expensive derivation. Unlike localCheckpoint, the persisted rows keep
+    // their lineage: a lost block is recomputed, not a failed job.
+    val p = org.apache.spark.sql.GraftShim.persistTruncated(
+      pairs.select(col("id_a"), col("id_b")), StorageLevel.MEMORY_AND_DISK)
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
     // `cached` is the handle the round's persist lives on (labels is a
@@ -191,7 +193,7 @@ object CurationPipeline {
       .persist(StorageLevel.MEMORY_AND_DISK)
     losers.count() // materialize before releasing the internals it reads
     cached.unpersist(false)
-    org.apache.spark.sql.GraftShim.unpersistLocalCheckpoint(p)
+    org.apache.spark.sql.GraftShim.unpersistTruncated(p)
     losers
   }
 }

@@ -128,21 +128,22 @@ object GraftShim {
   val WriteExecutionName = "graftWriteFiles"
 
   /** Writes `df` as parquet under `outDir`, one `partitionCol=v` directory
-    * per value, through Spark's `FileFormatWriter` and the session's file
-    * commit protocol: the write `df.write.options(options)
+    * per value (or straight into `outDir` with no `partitionCol`, one file
+    * per non-empty task), through Spark's `FileFormatWriter` and the
+    * session's file commit protocol: the write `df.write.options(options)
     * .partitionBy(partitionCol).parquet(outDir)` does on a new directory,
     * but with the job's Hadoop conf a [[plainConf]] copy of the session's
     * (with `options`), and with `stats` beside Spark's own task-metrics
-    * tracker, which gets the same conf. `stats` sees only committed task
+    * tracker, which gets the same conf. `stats` see only committed task
     * attempts. `df`'s plan must already be ordered by `partitionCol`:
     * otherwise the writer would sort every row a second time, out of sight
     * of the plan, so the write fails instead. Runs as one SQL execution of
     * `df`'s plan, named [[WriteExecutionName]], so its stages carry the
     * caller's call site. This is how Delta's `TransactionalWrite.writeFiles`
     * writes. */
-  def writeFiles(df: DataFrame, outDir: String, partitionCol: String,
+  def writeFiles(df: DataFrame, outDir: String, partitionCol: Option[String],
       options: Map[String, String],
-      stats: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker): Unit = {
+      stats: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker*): Unit = {
     import org.apache.spark.internal.io.FileCommitProtocol
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
@@ -156,19 +157,20 @@ object GraftShim {
     val qe = df.queryExecution
     val optimized = qe.optimizedPlan
     // the optimizer drops the sort of a plan of at most one row per partition
-    require(optimized.maxRowsPerPartition.exists(_ <= 1) ||
-      optimized.output.find(_.name == partitionCol).exists(p =>
+    partitionCol.foreach(pc => require(optimized.maxRowsPerPartition.exists(_ <= 1) ||
+      optimized.output.find(_.name == pc).exists(p =>
         optimized.outputOrdering.headOption.exists(_.child.semanticEquals(p))),
-      s"writeFiles: the plan must be ordered by $partitionCol first, is by " +
-        optimized.outputOrdering.mkString(", "))
+      s"writeFiles: the plan must be ordered by $pc first, is by " +
+        optimized.outputOrdering.mkString(", ")))
     SQLExecution.withNewExecutionId(qe, Some(WriteExecutionName)) {
       val plan = qe.executedPlan
       FileFormatWriter.write(cs, plan, new ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(qualified, Map.empty, plan.output), conf,
-        partitionColumns = plan.output.filter(_.name == partitionCol), bucketSpec = None,
-        statsTrackers = Seq(new BasicWriteJobStatsTracker(
+        partitionColumns = plan.output.filter(a => partitionCol.contains(a.name)),
+        bucketSpec = None,
+        statsTrackers = new BasicWriteJobStatsTracker(
           new org.apache.spark.util.SerializableConfiguration(conf),
-          BasicWriteJobStatsTracker.metrics), stats),
+          BasicWriteJobStatsTracker.metrics) +: stats,
         options = options)
     }
   }
@@ -197,11 +199,27 @@ object GraftShim {
     override def hashCode(): Int = rootPaths.toSet.hashCode()
   }
 
-  /** Release the storage behind a `localCheckpoint()`ed DataFrame — the
-    * checkpoint persists an RDD[InternalRow] that is not registered with
-    * the CacheManager, so `Dataset.unpersist` cannot reach it
-    * (`LogicalRDD` is `private[sql]`, hence this in-package helper). */
-  def unpersistLocalCheckpoint(df: Dataset[_]): Unit =
+  /** `df`'s rows, computed once and persisted at `level`, behind a plan
+    * that is a single scan of them (a `LogicalRDD`): later plans over the
+    * result stay O(1) in size however large `df`'s plan is. The rows are
+    * `df`'s executed plan's internal rows, copied (operators reuse their
+    * output row objects). Unlike `localCheckpoint`, the persisted RDD keeps
+    * its lineage, so a lost or evicted block is recomputed from `df`
+    * instead of failing the job. Release it with [[unpersistTruncated]]
+    * (`LogicalRDD` is `private[sql]`, hence this in-package bridge). */
+  def persistTruncated(df: DataFrame,
+      level: org.apache.spark.storage.StorageLevel): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(level)
+    rdd.count()
+    classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
+  }
+
+  /** Release the storage behind a [[persistTruncated]] DataFrame — its
+    * persisted RDD[InternalRow] is not registered with the CacheManager,
+    * so `Dataset.unpersist` cannot reach it. */
+  def unpersistTruncated(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()

@@ -31,12 +31,38 @@ object Oracle {
 
 class CdcSpec extends SparkSpec {
   import spark.implicits._
+  import scala.jdk.CollectionConverters._
 
   private def collectEvents(cfg: ChangeLogGen.Config): Seq[Oracle.Ev] =
     ChangeLogGen.events(spark, cfg).collect().toSeq.map { r =>
       Oracle.Ev(r.getLong(0), r.getString(1), r.getTimestamp(2), r.getString(3),
         r.getInt(4), r.getString(5), r.getString(6), Option(r.getString(7)))
     }
+
+  test("writeLog: each segment holds filesPerSegment files and exactly events() of its range") {
+    val cfg = ChangeLogGen.Config(numEvents = 3000, numConversations = 40, maxTurns = 8)
+    val dir = tmpDir("log-segments")
+    // 3 segments of 1000 events, cut again at the evolution point (1200)
+    val ranges = Seq((0L, 1000L), (1000L, 1200L), (1200L, 2000L), (2000L, 3000L))
+    def parquetFiles(seg: String): Int = {
+      val st = java.nio.file.Files.list(java.nio.file.Paths.get(seg))
+      try st.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      finally st.close()
+    }
+    // the second write overwrites the first, with fewer files
+    Seq(4, 2).foreach { files =>
+      val segs = ChangeLogGen.writeLog(spark, dir, cfg, numSegments = 3, filesPerSegment = files)
+      assert(segs.size == ranges.size)
+      segs.zip(ranges).foreach { case (seg, (lo, hi)) =>
+        val expect = ChangeLogGen.events(spark, cfg, lo, hi, withToolCol = lo >= 1200)
+        val got = spark.read.parquet(seg)
+        assert(got.columns.toSeq == expect.columns.toSeq, seg)
+        assert(got.collect().map(_.toString).sorted.toSeq ==
+          expect.collect().map(_.toString).sorted.toSeq, s"$seg holds events [$lo, $hi)")
+        assert(parquetFiles(seg) == files, seg)
+      }
+    }
+  }
 
   test("generator is deterministic and parallelism-independent") {
     val cfg = ChangeLogGen.Config(numEvents = 5000, numConversations = 50, maxTurns = 16)

@@ -49,8 +49,10 @@ class LakeSpec extends SparkSpec {
     val expect = Oracle.finalState(collectEvents(cfg))
       .map { case (k, e) => k -> ((e.role, e.text)) }
 
-    // depth 1 is the serial case of the same pipeline
-    Seq(3, 1).foreach { depth =>
+    // depth 1 is the serial case of the same pipeline; on local[4] depths 8
+    // and 3 write each batch in one task with no exchange, depth 2 in two
+    // tasks behind the exchange
+    Seq(8, 3, 2, 1).foreach { depth =>
       val table = new LakeTable(spark, tmpDir(s"pipe-table-d$depth"), numBuckets = 4)
       table.create(Model.transcriptSchema)
       val opts = CdcApply.Options(mergeOnRead = true, compactEvery = 100, pipelineDepth = depth)
@@ -657,7 +659,7 @@ class LakeSpec extends SparkSpec {
       .sortWithinPartitions("_bucket", "_lsn")
     val stats = new FileStatsTracker(df.drop("_bucket").schema, "conv_id")
     val out = tmpDir("mrg-stats") + "/t"
-    org.apache.spark.sql.GraftShim.writeFiles(df, out, "_bucket", Map(
+    org.apache.spark.sql.GraftShim.writeFiles(df, out, Some("_bucket"), Map(
       "parquet.block.size" -> "1024", "parquet.page.size" -> "256",
       "parquet.enable.dictionary" -> "false"), stats)
     val Seq(st) = stats.files

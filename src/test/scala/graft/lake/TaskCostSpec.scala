@@ -13,6 +13,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.{AnalysisException, DataFrame, GraftShim}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{StringType, StructField}
@@ -24,21 +25,29 @@ import org.apache.spark.sql.util.QueryExecutionListener
 class TaskCostSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Runs `body` under its own job group; returns the jobs it started and
-    * the (numTasks, isResultStage) of every stage it ran. */
-  private def tasksOf(group: String)(body: => Unit): (Int, Seq[(Int, Boolean)]) = {
+  /** A stage run under [[tasksOf]]: its SQL execution id ("" outside
+    * one), task count and whether it ran result tasks. */
+  private final case class Stage(execution: String, tasks: Int, result: Boolean)
+
+  /** Runs `body` under its own job group (threads `body` starts inherit
+    * it); returns the jobs it started per SQL execution id and every stage
+    * it ran. */
+  private def tasksOf(group: String)(body: => Unit): (Map[String, Int], Seq[Stage]) = {
     val sc = spark.sparkContext
     GraftShim.waitListenerBusEmpty(spark)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, Int]() // id -> numTasks
+    val jobs = new ConcurrentLinkedQueue[String]() // execution id per job
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, (String, Int)]()
     val resultStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     def ours(p: java.util.Properties) =
       p != null && p.getProperty("spark.jobGroup.id") == group
+    def execution(p: java.util.Properties) =
+      Option(p.getProperty("spark.sql.execution.id")).getOrElse("")
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) jobs.incrementAndGet()
+        if (ours(e.properties)) jobs.add(execution(e.properties))
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties)) stages.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+        if (ours(e.properties))
+          stages.put(e.stageInfo.stageId, (execution(e.properties), e.stageInfo.numTasks))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskType == "ResultTask") resultStages.add(e.stageId)
     }
@@ -47,7 +56,8 @@ class TaskCostSpec extends SparkSpec {
     try {
       body
       GraftShim.waitListenerBusEmpty(spark)
-      (jobs.get, stages.asScala.toSeq.map { case (id, n) => (n, resultStages.contains(id)) })
+      (jobs.asScala.toSeq.groupBy(identity).map { case (x, js) => x -> js.size },
+        stages.asScala.toSeq.map { case (id, (x, n)) => Stage(x, n, resultStages.contains(id)) })
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(l)
@@ -96,7 +106,7 @@ class TaskCostSpec extends SparkSpec {
       t.readConvRange("c000", "c096")
       new ChangeFeedSource(spark, t, 0L, None).getBatch(None, LongOffset(v))
     }
-    assert(jobs == 0, s"building the DataFrames started $jobs Spark job(s) (a listing job)")
+    assert(jobs.isEmpty, s"building the DataFrames started Spark job(s) (a listing job): $jobs")
   }
 
   test("known-file scan ≡ spark.read.schema(s).parquet(paths): rows, schema, evolved column") {
@@ -227,20 +237,46 @@ class TaskCostSpec extends SparkSpec {
     val df = Seq(("c1", 1L, 1), ("c0", 2L, 0)).toDF("conv_id", "_lsn", "_bucket")
     val stats = new FileStatsTracker(df.drop("_bucket").schema, "conv_id")
     val e = intercept[IllegalArgumentException](
-      GraftShim.writeFiles(df, tmpDir("unsorted-write") + "/t", "_bucket", Map.empty, stats))
+      GraftShim.writeFiles(df, tmpDir("unsorted-write") + "/t", Some("_bucket"), Map.empty, stats))
     assert(e.getMessage.contains("ordered by _bucket"), e.getMessage)
     GraftShim.writeFiles(df.sortWithinPartitions("_bucket"), tmpDir("sorted-write") + "/t",
-      "_bucket", Map.empty, stats)
+      Some("_bucket"), Map.empty, stats)
     assert(stats.files.map(f => (f.bucket, f.rows, f.keyMin)).sorted ==
       Seq((0, 1L, Some("c0")), (1, 1L, Some("c1"))))
   }
 
-  /** Node names of a physical plan, adaptive wrappers expanded. */
-  private def nodeNames(p: SparkPlan): Seq[String] = p match {
-    case a: AdaptiveSparkPlanExec => nodeNames(a.executedPlan)
-    case q: QueryStageExec => nodeNames(q.plan)
-    case other => other.nodeName +: other.children.flatMap(nodeNames)
+  /** Nodes of a physical plan, adaptive wrappers expanded. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => planNodes(q.plan)
+    case other => other +: other.children.flatMap(planNodes)
   }
+
+  private def nodeNames(p: SparkPlan): Seq[String] = planNodes(p).map(_.nodeName)
+
+  private def hasExchange(p: SparkPlan): Boolean =
+    planNodes(p).exists(_.isInstanceOf[ShuffleExchangeLike])
+
+  /** Executed plans of the engine's table writes while `body` runs. */
+  private def writePlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == GraftShim.WriteExecutionName) plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftShim.waitListenerBusEmpty(spark)
+    spark.listenerManager.register(qel)
+    try {
+      body
+      GraftShim.waitListenerBusEmpty(spark)
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(qel)
+  }
+
+  private def eventsDf(evs: Seq[Oracle.Ev]): DataFrame =
+    evs.map(e => (e.lsn, e.op, e.ts, e.convId, e.turnIdx, e.role, e.text))
+      .toDF("lsn", "op", "ts", "conv_id", "turn_idx", "role", "text")
 
   test("one wave of write tasks: MoR append and CoW merge on 32 buckets with a hot key") {
     val cores = spark.sparkContext.defaultParallelism
@@ -253,33 +289,24 @@ class TaskCostSpec extends SparkSpec {
         s"t${lsn0 + i}", None)
     }
     val batches = Seq(batch(0L), batch(10000L))
-    def df(evs: Seq[Oracle.Ev]): DataFrame =
-      evs.map(e => (e.lsn, e.op, e.ts, e.convId, e.turnIdx, e.role, e.text))
-        .toDF("lsn", "op", "ts", "conv_id", "turn_idx", "role", "text")
     val expect = Oracle.finalState(batches.flatten).map { case (k, e) => k -> e.text }
 
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val qel = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        if (f == GraftShim.WriteExecutionName) plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(qel)
-    try Seq(false, true).foreach { mergeOnRead =>
+    Seq(false, true).foreach { mergeOnRead =>
       val mode = if (mergeOnRead) "MoR append" else "CoW merge"
       val t = new LakeTable(spark, tmpDir("wave-table"), numBuckets = 32)
       t.create(Model.transcriptSchema)
       batches.zipWithIndex.foreach { case (evs, id) =>
         val before = t.currentSnapshot
         val slices = t.slicePlan((0 until 32).toSet, before.bucketWeights)
-        GraftShim.waitListenerBusEmpty(spark)
-        plans.clear()
-        val (_, stages) = tasksOf(s"wave-$mode-$id") {
-          CdcApply.applyBatch(t, df(evs), id.toLong,
-            CdcApply.Options(mergeOnRead = mergeOnRead, compactEvery = 100))
-          ()
+        var stages = Seq.empty[Stage]
+        val writes = writePlans {
+          stages = tasksOf(s"wave-$mode-$id") {
+            CdcApply.applyBatch(t, eventsDf(evs), id.toLong,
+              CdcApply.Options(mergeOnRead = mergeOnRead, compactEvery = 100))
+            ()
+          }._2
         }
-        val resultTasks = stages.collect { case (n, true) => n }
+        val resultTasks = stages.collect { case Stage(_, n, true) => n }
         assert(resultTasks.nonEmpty && resultTasks.forall(_ <= cores),
           s"$mode batch $id: write result stages ran $resultTasks tasks (one wave = $cores)")
         val after = t.currentSnapshot
@@ -296,14 +323,104 @@ class TaskCostSpec extends SparkSpec {
           assert(slices(hot) > 1 && added.toMap.apply(hot) > 1,
             s"$mode: the hot bucket must be salted (slices ${slices(hot)}) and spread over tasks")
         }
-        GraftShim.waitListenerBusEmpty(spark)
-        val writes = plans.asScala.toSeq
         assert(writes.size == 1, s"$mode batch $id: one write command, got ${writes.size}")
         val sorts = nodeNames(writes.head).count(_ == "Sort")
         assert(sorts == 1, s"$mode batch $id: one Sort under the write, got $sorts:\n${writes.head}")
       }
       val got = t.read().collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(3)).toMap
       assert(got == expect, s"$mode: table equals the LWW oracle")
-    } finally spark.listenerManager.unregister(qel)
+    }
+  }
+
+  test("pipelined batches share the cores: one narrow stage per write at depth ≥ cores, " +
+      "the LWW exchange at depth 1") {
+    val cores = spark.sparkContext.defaultParallelism
+    val ts = new java.sql.Timestamp(0L)
+    // half of every batch is one hot conversation; in batch 1 one key of it
+    // arrives with 10^3 LSNs; every 10th event is redelivered with its LSN
+    // and payload
+    def batch(id: Int): Seq[Oracle.Ev] = {
+      val evs = (0 until 3000).map { i =>
+        val lsn = id * 100000L + i
+        val hot = i % 2 == 0
+        val turn = if (id == 1 && hot && i < 2000) 0 else i / 2 % 700
+        Oracle.Ev(lsn, if (i % 97 == 5) "D" else if (i % 50 == 7) "U" else "I", ts,
+          if (hot) "hot" else f"c${i % 400}%03d", turn, "user", s"t$lsn", None)
+      }
+      evs ++ evs.filter(_.lsn % 10 == 3)
+    }
+    val batches = (0 until 4).map(batch)
+    assert(batches(1).count(e => e.convId == "hot" && e.turnIdx == 0) >= 1000)
+    val logDir = tmpDir("share-log")
+    val segments = batches.zipWithIndex.map { case (evs, i) =>
+      val seg = s"$logDir/segment-$i"
+      eventsDf(evs).withColumn("tool", lit(null).cast("string")).repartition(4)
+        .write.parquet(seg)
+      seg
+    }
+    val expect = Oracle.finalState(batches.flatten).map { case (k, e) => k -> e.text }
+
+    Seq(cores, 2 * cores, 1).foreach { depth =>
+      val share = math.max(1, cores / depth)
+      val t = new LakeTable(spark, tmpDir(s"share-table-d$depth"), numBuckets = 32)
+      t.create(Model.transcriptSchema)
+      var run = (Map.empty[String, Int], Seq.empty[Stage])
+      val plans = writePlans {
+        run = tasksOf(s"share-d$depth") {
+          CdcApply.replay(spark, t, segments,
+            CdcApply.Options(mergeOnRead = true, compactEvery = 100, pipelineDepth = depth))
+        }
+      }
+      val (jobs, stages) = run
+      assert(plans.size == segments.size, s"depth $depth: one write per batch, got ${plans.size}")
+      val byWrite = stages.groupBy(_.execution)
+      assert(jobs.keySet == byWrite.keySet && !jobs.contains("") &&
+        byWrite.size == segments.size,
+        s"depth $depth: every job belongs to one of the ${segments.size} writes: $jobs")
+      if (share == 1) {
+        plans.foreach(p => assert(!hasExchange(p), s"depth $depth: the write shuffles:\n$p"))
+        assert(jobs.values.forall(_ == 1), s"depth $depth: jobs per write $jobs")
+        byWrite.values.foreach(st => assert(st == Seq(Stage(st.head.execution, 1, true)),
+          s"depth $depth: a write ran stages $st, not one one-task result stage"))
+        // one task per write: each bucket gets at most one file per batch
+        val perCommit = t.currentSnapshot.deltas.values.flatten
+          .groupBy(f => (f.split("/")(1), f.split("/")(2)))
+        assert(perCommit.values.forall(_.size == 1),
+          s"depth $depth: a bucket got several files from one batch")
+      } else {
+        plans.foreach(p => assert(hasExchange(p), s"depth $depth: the LWW exchange is gone:\n$p"))
+        byWrite.values.foreach { st =>
+          assert(st.exists(!_.result), s"depth $depth: no map stage in $st")
+          assert(st.filter(_.result).forall(_.tasks <= share),
+            s"depth $depth: result stages $st exceed $share tasks")
+        }
+      }
+      val got = t.read().collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(3)).toMap
+      assert(got == expect, s"depth $depth: table equals the LWW oracle")
+    }
+  }
+
+  test("lwwDedupSorted with one partition ≡ the exchange path: 8 input partitions, " +
+      "duplicates across them") {
+    val base = (0 until 3000).map(i => (s"c${i % 37}", i % 11, i.toLong, s"t$i"))
+    // exact redeliveries sit in later input partitions than their originals
+    val input = spark.sparkContext.parallelize(base ++ base.filter(_._3 % 5 == 0), 8)
+      .toDF("conv_id", "turn_idx", "_lsn", "text")
+      .withColumn("_bucket", org.apache.spark.sql.functions.pmod(
+        org.apache.spark.sql.functions.hash(col("conv_id")), lit(4)))
+    assert(input.rdd.getNumPartitions == 8)
+    val keys = Seq("conv_id", "turn_idx")
+    val one = CdcApply.lwwDedupSorted(input, keys, Seq(col("_bucket")), 1)
+    val exchanged = CdcApply.lwwDedupSorted(input, keys, Seq(col("_bucket")), 4,
+      partitionId = Some(col("_bucket")))
+    assert(!hasExchange(one.queryExecution.executedPlan), one.queryExecution.executedPlan.toString)
+    assert(one.rdd.getNumPartitions == 1)
+    assert(hasExchange(exchanged.queryExecution.executedPlan))
+    val expect = base.groupBy(b => (b._1, b._2)).values.map(_.maxBy(_._3))
+      .map { case (c, t, l, x) => (c, t, l, x) }.toSeq.sorted
+    def rows(df: DataFrame) = df.select("conv_id", "turn_idx", "_lsn", "text")
+      .as[(String, Int, Long, String)].collect().toSeq.sorted
+    assert(rows(one) == rows(exchanged))
+    assert(rows(one) == expect)
   }
 }

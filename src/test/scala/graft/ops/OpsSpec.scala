@@ -246,6 +246,21 @@ class TextOpsSpec extends SparkSpec {
       s"one action per propagation round expected, observed ${actions.get()}")
   }
 
+  test("CC truncation keeps its lineage: released blocks are recomputed, not lost") {
+    import org.apache.spark.sql.GraftShim
+    val pairs = Seq((1L, 3L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    val p = GraftShim.persistTruncated(pairs, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = p.as[(Long, Long)].collect().toSet
+    GraftShim.unpersistTruncated(p)
+    assert(p.as[(Long, Long)].collect().toSet == rows && rows.size == 3)
+    // connectedLosers releases its truncation before it returns: dropping the
+    // persisted losers makes the next action recompute through it
+    val losers = CurationPipeline.connectedLosers(pairs)
+    assert(losers.select("doc_id").as[Long].collect().toSet == Set(2L, 3L, 6L))
+    losers.unpersist(true)
+    assert(losers.select("doc_id").as[Long].collect().toSet == Set(2L, 3L, 6L))
+  }
+
   test("CC survivor selection over an EMPTY pair set: no losers, no crash") {
     // a corpus with no near-duplicates is a legitimate input — the round's
     // folded convergence aggregate must coalesce its sum over zero rows
