@@ -201,14 +201,13 @@ object CdcApply {
     * the batch's LWW'd rows; for copy-on-write every row of the rewritten
     * buckets — the merge rewrites every bucket holding data, so this is the
     * table's post-merge row count, not the batch's event count (per-batch
-    * event counts are ROADMAP direction 3). Lineage records the same count.
+    * event counts are ROADMAP direction 3). Its commit records it as lineage.
     * Merge-on-read appends the LWW'd batch as delta files; copy-on-write
     * runs the table's one-job MERGE. Both are one Spark job, skew-salted by
-    * the previous batch's persisted bucket weights, and both take lineage
-    * from the stats their write tasks counted for the files they wrote. */
+    * the previous batch's persisted bucket weights, and both count from
+    * the stats their write tasks counted for the files they wrote. */
   def applyBatch(table: LakeTable, events: DataFrame, batchId: Long,
       opts: Options = Options()): Long = {
-    val t0 = System.nanoTime()
     // idempotence short-circuit up front: a replayed batch id skips ALL
     // work (dead-letter append, merge) — not just the commit
     if (table.currentSnapshot.applied(batchId)) return 0L
@@ -221,11 +220,7 @@ object CdcApply {
         if (s.isDefined) maybeCompact(table, opts)
         s
       } else table.merge(batch, Model.keyCols, batchId, bucketWeights = weights)
-    val durMs = (System.nanoTime() - t0) / 1000000
-    statsOpt.fold(0L) { stats =>
-      table.bufferLineage(batchId, stats, durMs)
-      stats.map(_._2).sum
-    }
+    statsOpt.fold(0L)(_.map(_._2).sum)
   }
 
   /** Batch replay: apply a sequence of log-segment directories in order,
@@ -249,7 +244,6 @@ object CdcApply {
         applyBatch(table, spark.read.parquet(seg), i.toLong, opts)
       }
       table.awaitMaintenance()
-      table.flushLineage()
     }
 
   /** Compaction trigger shared by the apply paths: runs on the table's

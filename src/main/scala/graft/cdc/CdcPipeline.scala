@@ -68,7 +68,7 @@ final class CdcPipeline(
   /** Bounds batches in flight (write dispatched, commit outstanding). */
   private val inFlight = new Semaphore(depth)
   private val results = new java.util.concurrent.ConcurrentHashMap[
-    Long, CompletableFuture[Try[(LakeTable.DeltaWrite, Long)]]]()
+    Long, CompletableFuture[Try[LakeTable.DeltaWrite]]]()
   @volatile private var failure: Throwable = null
   @volatile private var warnedNoManifest = false
   private val pipelined = new java.util.concurrent.atomic.AtomicInteger()
@@ -120,17 +120,15 @@ final class CdcPipeline(
     }
     pipelined.incrementAndGet()
     inFlight.acquire()
-    val fut = new CompletableFuture[Try[(LakeTable.DeltaWrite, Long)]]()
+    val fut = new CompletableFuture[Try[LakeTable.DeltaWrite]]()
     results.put(batchId, fut)
     writePool.execute(() => fut.complete(Try {
-      val t0 = System.nanoTime()
       testWriteHook()
       val ev = GraftShim.knownParquetDf(spark, Model.changeEventSchema, files)
       opts.deadLetterDir.foreach(CdcApply.writeDeadLetters(ev, batchId, _))
       val prepared = CdcApply.prepareBatch(ev)
-      val w = table.writeDeltaFiles(prepared, Model.keyCols,
+      table.writeDeltaFiles(prepared, Model.keyCols,
         bucketWeights = table.currentSnapshot.bucketWeights, maxTasks = writeTasks)
-      (w, (System.nanoTime() - t0) / 1000000)
     }))
     committer.execute(() => commitOne(batchId))
   }
@@ -145,11 +143,10 @@ final class CdcPipeline(
     val fut = results.get(batchId)
     if (fut == null) { inFlight.release(); return } // abort() already swept it
     try fut.get() match {
-      case Success((w, durMs)) =>
+      case Success(w) =>
         if (failure != null) table.abandonDelta(w)
         else {
-          if (table.commitDelta(batchId, w))
-            table.bufferLineage(batchId, w.stats, durMs)
+          table.commitDelta(batchId, w)
           CdcApply.maybeCompact(table, opts)
         }
       case Failure(t) => if (failure == null) failure = t
@@ -164,22 +161,20 @@ final class CdcPipeline(
 
   /** Release a write's pending-file registrations whenever it lands
     * (abandonDelta is a set-remove, so a write also committed is a no-op). */
-  private def abandonWhenDone(
-      f: CompletableFuture[Try[(LakeTable.DeltaWrite, Long)]]): Unit =
+  private def abandonWhenDone(f: CompletableFuture[Try[LakeTable.DeltaWrite]]): Unit =
     f.whenComplete((r, _) => r match {
-      case Success((w, _)) => table.abandonDelta(w)
+      case Success(w) => table.abandonDelta(w)
       case _ => ()
     })
 
   /** Graceful drain after the query terminates: every submitted batch
-    * commits, maintenance settles, lineage flushes. Rethrows any async
-    * failure so the caller cannot mistake a broken run for a clean one. */
+    * commits and maintenance settles. Rethrows any async failure so the
+    * caller cannot mistake a broken run for a clean one. */
   def close(): Unit = {
     try committer.submit(new Runnable { def run(): Unit = () })
       .get(10, TimeUnit.MINUTES)
     finally { writePool.shutdown(); committer.shutdown() }
     table.awaitMaintenance()
-    table.flushLineage()
     rethrowIfFailed()
   }
 
@@ -273,7 +268,6 @@ object CdcPipeline {
         }
       }
     }
-    if (recovered > 0) table.flushLineage()
     recovered
   }
 }

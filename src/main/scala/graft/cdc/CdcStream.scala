@@ -294,7 +294,6 @@ object CdcStream {
       val q = start(spark, logDir, table, checkpointDir, maxFilesPerTrigger, opts)
       q.awaitTermination()
       table.awaitMaintenance() // settle background compaction debt
-      table.flushLineage() // lineage is buffered per flush window; drain at end
     }
     // Post-termination journal sweep. The file source can JOURNAL one more
     // batch (sources/0/N written inside its final latestOffset) that the
@@ -306,8 +305,8 @@ object CdcStream {
     // source-log batch above the watermark is applied at (re)start"), so
     // run the recovery sweep at TERMINATION too: a no-op on the common
     // path, and it synchronously applies any planned-but-unrun tail batch
-    // (recoverPending flushes its own lineage; re-await maintenance so a
-    // compaction the sweep triggered doesn't outlive the call).
+    // (re-await maintenance so a compaction the sweep triggered doesn't
+    // outlive the call).
     if (CdcPipeline.recoverPending(spark, table, checkpointDir, opts) > 0)
       table.awaitMaintenance()
   }

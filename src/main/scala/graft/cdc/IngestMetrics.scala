@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
  * watermark over the change feed — the Structured Streaming surface of the
  * engine beyond foreachBatch (per-op counts and lsn ranges per window,
  * late events beyond the watermark dropped). Complements the per-batch
- * lineage rows (LakeTable.lineage, which count rows WRITTEN: for a
+ * lineage rows (LakeTable.lineage, read from the batch record each ingest
+ * commit writes into its snapshot; they count rows WRITTEN: for a
  * copy-on-write batch every row of its rewritten buckets, not its events)
  * with event-time visibility; these windows count the events themselves.
  */

@@ -2,7 +2,7 @@ package graft.lake
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -40,11 +40,12 @@ import scala.jdk.CollectionConverters._
  *  - commit is write-new-snapshot-file + atomic rename of the `_latest`
  *    pointer — kill-during-commit leaves the old snapshot current and the
  *    orphan files unreachable;
- *  - per-batch stats (lineage + skew weights) and per-file key ranges
- *    come from the write tasks ([[FileStatsTracker]]): Spark reports only
- *    committed task attempts' stats, so they are exact under task retries
- *    and speculative execution (an accumulator would double-count), and
- *    the driver opens no footer and lists no directory after a write;
+ *  - per-batch stats (skew weights; lineage, recorded in each ingest
+ *    commit) and per-file key ranges come from the write tasks
+ *    ([[FileStatsTracker]]): Spark reports only committed task attempts'
+ *    stats, so they are exact under task retries and speculative execution
+ *    (an accumulator would double-count), and the driver opens no footer
+ *    and lists no directory after a write;
  *  - pipelined apply: [[writeDeltaFiles]] (a pure Spark job, runnable for
  *    several batches concurrently) is split from [[commitDelta]] (ordered,
  *    serialized) so the driver's per-batch serial work overlaps executor
@@ -154,7 +155,6 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     Files.createDirectories(snapsDir)
     Files.createDirectories(manifestsDir)
     Files.createDirectories(rootPath.resolve("data"))
-    Files.createDirectories(rootPath.resolve("lineage"))
     commit(Snapshot(0L, withMeta(schema), Map.empty, -1L, Set.empty,
       numBuckets = numBuckets, op = "init"))
   }
@@ -234,6 +234,15 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     else scala.util.Try(digits.toLong).toOption
   }
 
+  /** Every snapshot file as `(version, path)`, sorted by version: the one
+    * listing of `snapshots/` behind time travel, the history walks and
+    * expiry. */
+  private def snapshotFiles(): Seq[(Long, Path)] =
+    listed(snapsDir).flatMap { p =>
+      val n = p.getFileName.toString
+      if (n.endsWith(".json")) versionOfName(n).map(_ -> p) else None
+    }.sortBy(_._1)
+
   private def writeManifest(name: String, m: BucketManifest): Unit = {
     val node = mapper.createObjectNode()
     val fa = node.putArray("files"); m.files.foreach(fa.add)
@@ -248,19 +257,28 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     manifestCache.put(name, m)
   }
 
-  /** Parse a snapshot file. `manifests`, `appliedWatermark` and `op` are
-    * required: a snapshot lacking one is not a table this code wrote, and
-    * reading it as empty would silently lose files or applied batches. */
-  private def readSnapshot(p: Path): Snapshot = {
-    val node = mapper.readTree(LakeTable.readStringRaw(p))
-    def required(field: String): JsonNode = Option(node.get(field)).getOrElse(
+  private def readJson(p: Path): JsonNode = mapper.readTree(LakeTable.readStringRaw(p))
+
+  private def required(p: Path, node: JsonNode, field: String): JsonNode =
+    Option(node.get(field)).getOrElse(
       throw new IllegalStateException(s"snapshot $p has no '$field' field"))
+
+  /** Parse a snapshot file. `manifests`, `appliedWatermark` and `op` are
+    * required, and an ingest commit also requires its batch record
+    * (`ingest`): a snapshot lacking one is not a table this code wrote,
+    * and reading it as empty would silently lose files, applied batches
+    * or lineage. */
+  private def readSnapshot(p: Path): Snapshot = readSnapshot(p, readJson(p))
+
+  private def readSnapshot(p: Path, node: JsonNode): Snapshot = {
+    val op = required(p, node, "op").asText
+    if (isIngest(op)) required(p, node, "ingest")
     val schema = DataType.fromJson(node.get("schema").asText).asInstanceOf[StructType]
     val nb = Option(node.get("numBuckets")).map(_.asInt).getOrElse(numBuckets)
     val weights = Option(node.get("bucketWeights")).map(_.asInstanceOf[ObjectNode]
       .properties().asScala.map(e => e.getKey.toInt -> e.getValue.asLong).toMap)
       .getOrElse(Map.empty[Int, Long])
-    val names = required("manifests").asInstanceOf[ObjectNode].properties().asScala
+    val names = required(p, node, "manifests").asInstanceOf[ObjectNode].properties().asScala
       .map(e => e.getKey.toInt -> e.getValue.asText).toMap
     val ms = names.map { case (b, n) => b -> readManifest(n) }
     val exc = Option(node.get("appliedExceptions"))
@@ -268,13 +286,33 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       .getOrElse(Set.empty[Long])
     Snapshot(node.get("version").asLong, schema,
       ms.collect { case (b, m) if m.files.nonEmpty => b -> m.files },
-      required("appliedWatermark").asLong, exc,
+      required(p, node, "appliedWatermark").asLong, exc,
       ms.collect { case (b, m) if m.deltas.nonEmpty => b -> m.deltas },
       nb, weights,
-      ms.values.flatMap(_.ranges).toMap, names, required("op").asText)
+      ms.values.flatMap(_.ranges).toMap, names, op)
   }
 
-  private def commit(s0: Snapshot): Unit = commitLock.synchronized {
+  /** Lineage rows of the batch record an ingest snapshot carries: one per
+    * bucket its batch wrote rows to, in [[lineageSchema]] order. Other
+    * commits carry no record and yield none. */
+  private def lineageRows(p: Path, node: JsonNode): Seq[Row] =
+    if (!isIngest(required(p, node, "op").asText)) Nil
+    else {
+      val rec = required(p, node, "ingest")
+      val (batchId, writeMs) = (rec.get("batchId").asLong, rec.get("writeMs").asLong)
+      rec.get("buckets").properties().asScala.toSeq.map { e =>
+        val a = e.getValue
+        Row(batchId, e.getKey.toLong, a.get(0).asLong, a.get(1).asLong, a.get(2).asLong, writeMs)
+      }
+    }
+
+  /** Publish `s0`. An ingest commit records `ingest`, its (batch id,
+    * write), as the batch's lineage: an argument, not a [[Snapshot]] field,
+    * so a maintenance commit built with `copy` cannot re-publish it. */
+  private def commit(s0: Snapshot, ingest: Option[(Long, DeltaWrite)] = None): Unit =
+      commitLock.synchronized {
+    require(ingest.isDefined == isIngest(s0.op),
+      s"'${s0.op}' commit with batch record ${ingest.map(_._1)}")
     // keep key-range metadata bounded: only live files carry ranges
     val live = (s0.files.values.flatten ++ s0.deltas.values.flatten).toSet
     val s = if (s0.fileRanges.keysIterator.forall(live.contains)) s0
@@ -312,6 +350,12 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     s.appliedExceptions.toSeq.sorted.foreach(exc.add)
     val wn = node.putObject("bucketWeights")
     s.bucketWeights.foreach { case (b, w) => wn.put(b.toString, w) }
+    ingest.foreach { case (batchId, w) =>
+      val bn = node.putObject("ingest").put("batchId", batchId).put("writeMs", w.writeMs)
+        .putObject("buckets")
+      w.stats.foreach { case (b, rows, lsnMin, lsnMax) =>
+        bn.putArray(b.toString).add(rows).add(lsnMin).add(lsnMax) }
+    }
     // the snapshot file name IS the optimistic-concurrency token: exactly
     // one committer can create `v<N>.json`, so a second process committing
     // against the same parent version fails LOUDLY here instead of silently
@@ -378,12 +422,9 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       .select(publicCols.map(col).toSeq: _*)
   }
 
-  private def snapshotAt(version: Long): Snapshot = {
-    val p = listed(snapsDir)
-      .find(p => versionOfName(p.getFileName.toString).contains(version))
-      .getOrElse(sys.error(s"no snapshot for version $version (expired or never committed)"))
-    readSnapshot(p)
-  }
+  private def snapshotAt(version: Long): Snapshot =
+    readSnapshot(snapshotFiles().collectFirst { case (`version`, p) => p }
+      .getOrElse(sys.error(s"no snapshot for version $version (expired or never committed)")))
 
   /** Incremental change feed (Iceberg incremental-scan / changelog
     * analog): every change EVENT — upserts AND delete tombstones, public
@@ -430,51 +471,49 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * [[readChangesSince]] and each micro-batch of the streaming change-feed
     * source ([[graft.streaming.ChangeFeedSource]]). O(window) snapshot
     * reads, no Spark job, no data IO. */
-  def changeFilesBetween(fromVersion: Long, toVersion: Long): Seq[String] =
-    changeFilesByVersion(fromVersion, toVersion).flatMap(_._2)
-
-  /** [[changeFilesBetween]] with per-version granularity: `(v, files added
-    * by commit v)` for every v in `(fromVersion, toVersion]` — versions
-    * that add no change events (compact/rescale/schema) yield empty lists.
-    * One directory listing for the whole walk. */
-  def changeFilesByVersion(fromVersion: Long, toVersion: Long): Seq[(Long, Seq[String])] = {
-    val added = Seq.newBuilder[(Long, Seq[String])]
-    walkChanges(fromVersion, toVersion)((v, files) => added += v -> files)
+  def changeFilesBetween(fromVersion: Long, toVersion: Long): Seq[String] = {
+    val added = Seq.newBuilder[String]
+    changeInfoByVersion(fromVersion, toVersion)((_, _, files) => added ++= files)
     added.result()
   }
 
-  /** The history walk behind [[changeFilesByVersion]] and
-    * [[changeInfoByVersion]]: hands `(v, files added by commit v)` to
-    * `each` as soon as version v is read, so a caller keeps everything the
-    * walk found before a version that fails it (a copy-on-write commit,
-    * an expired snapshot). */
-  private def walkChanges(fromVersion: Long, toVersion: Long)(
-      each: (Long, Seq[String]) => Unit): Unit = {
+  /** The history walk: `(version, exact change-event count, files added)`
+    * for every version in `(fromVersion, toVersion]`, handed to `each` as
+    * soon as the walk reads that version, so a caller keeps everything the
+    * walk found before a version that fails it (a copy-on-write commit, an
+    * expired snapshot). Versions that add no change events
+    * (compact/rescale/schema) yield 0 and no files. The count is the rows
+    * of the commit's batch record, the record [[lineage]] reads: its write
+    * tasks' counts of the files it added, so the walk opens no data file.
+    * Feeds the change-feed source's row-based admission control; the
+    * caller is expected to cache per-version results (snapshots are
+    * immutable, so an entry never changes). */
+  def changeInfoByVersion(fromVersion: Long, toVersion: Long)(
+      each: (Long, Long, Seq[String]) => Unit): Unit = {
     val cur = currentSnapshot
     require(fromVersion >= 0 && fromVersion <= toVersion && toVersion <= cur.version,
       s"window ($fromVersion, $toVersion] out of range [0, ${cur.version}]")
     // one directory listing for the whole walk (per-version snapshotAt
-    // would re-list — O(window × snapshots) at a months-long history);
-    // name parsing shared with snapshotAt via versionOfName
-    val byVersion: Map[Long, Path] = listed(snapsDir).flatMap { p =>
-      versionOfName(p.getFileName.toString).map(_ -> p)
-    }.toMap
-    def snap(v: Long): Snapshot = readSnapshot(byVersion.getOrElse(v,
-      sys.error(s"no snapshot for version $v (expired or never committed)")))
+    // would re-list — O(window × snapshots) at a months-long history)
+    val byVersion: Map[Long, Path] = snapshotFiles().toMap
+    def path(v: Long): Path = byVersion.getOrElse(v,
+      sys.error(s"no snapshot for version $v (expired or never committed)"))
     try {
-      var prev = snap(fromVersion)
+      var prev = readSnapshot(path(fromVersion))
       for (v <- fromVersion + 1 to toVersion) {
-        val s = snap(v)
+        val p = path(v)
+        val node = readJson(p)
+        val s = readSnapshot(p, node)
         s.op match {
           case "ingest-delta" =>
-            each(v, s.deltas.toSeq.flatMap { case (b, fs) =>
-              fs.diff(prev.deltas.getOrElse(b, Nil)) })
+            each(v, lineageRows(p, node).map(_.getLong(2)).sum,
+              s.deltas.toSeq.flatMap { case (b, fs) => fs.diff(prev.deltas.getOrElse(b, Nil)) })
           case "ingest-cow" =>
             sys.error(s"change-feed walk: snapshot v$v is a copy-on-write " +
               "ingest commit — change events are folded into rewritten base " +
               "files and cannot be recovered from metadata; use merge-on-read " +
               "apply for tables that feed incremental consumers")
-          case "compact" | "rescale" | "schema" | "init" => each(v, Nil)
+          case "compact" | "rescale" | "schema" | "init" => each(v, 0L, Nil)
           case other =>
             sys.error(s"change-feed walk: snapshot v$v carries an unknown " +
               s"commit kind '$other'")
@@ -486,23 +525,6 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       // restore the live-set bound (a polling reader never commits, so
       // commit-time pruning alone would leak driver memory here)
       pruneManifestCache(cur.manifestNames.values.toSet, cur.numBuckets)
-    }
-  }
-
-  /** Per-commit `(version, exact change-event count, files added)` for
-    * `(fromVersion, toVersion]`, handed to `each` version by version as the
-    * walk reaches it (see [[walkChanges]]) — counts are parquet FOOTER
-    * reads over each commit's added files (footer-stats discipline: exact
-    * under task retries; no data pages touched). Feeds the change-feed
-    * source's row-based admission control; the caller is expected to cache
-    * per-version results (files are immutable, so an entry never
-    * changes). */
-  def changeInfoByVersion(fromVersion: Long, toVersion: Long)(
-      each: (Long, Long, Seq[String]) => Unit): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    walkChanges(fromVersion, toVersion) { (v, files) =>
-      each(v, files.map(f => ParquetStats.rowCount(rootPath.resolve(f).toString, conf)).sum,
-        files)
     }
   }
 
@@ -638,7 +660,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * in one exchange, and rewrite; a bucket empty in both stays empty.
     *
     * Returns per-bucket (bucket, rowsWritten, lsnMin, lsnMax) write stats
-    * of the rewritten buckets, or None if `batchId` was already applied. */
+    * of the rewritten buckets, which the commit also records as the
+    * batch's [[lineage]], or None if `batchId` was already applied. */
   def merge(batch: DataFrame, keyCols: Seq[String], batchId: Long,
       bucketWeights: Map[Int, Long] = Map.empty): Option[Seq[(Int, Long, Long, Long)]] = {
     val s0 = currentSnapshot
@@ -685,7 +708,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       commit(s.copy(version = s.version + 1, schema = schema2, files = files2,
         deltas = foldedDeltas,
         bucketWeights = w.stats.map(x => x._1 -> x._2).toMap,
-        fileRanges = s.fileRanges ++ w.ranges, op = "ingest-cow").withApplied(batchId))
+        fileRanges = s.fileRanges ++ w.ranges, op = "ingest-cow").withApplied(batchId),
+        Some(batchId -> w))
     } finally releasePending(w.files) // referenced (or orphaned) either way
     Some(w.stats)
   }
@@ -710,7 +734,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   }
 
   /** Merge-on-read stage 2: register the delta files + batch id (+ any
-    * schema evolution) in ONE ordered commit. Returns false when the batch
+    * schema evolution) in ONE ordered commit, which also records the
+    * write's stats as the batch's [[lineage]]. Returns false when the batch
     * id was already applied (the files stay orphaned and unreachable —
     * same crash-safety story as a kill during commit). */
   def commitDelta(batchId: Long, w: DeltaWrite): Boolean = commitLock.synchronized {
@@ -728,7 +753,8 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
         else w.stats.map(x => x._1 -> x._2).toMap
       commit(s.copy(version = s.version + 1, schema = schema2, deltas = deltas2,
         bucketWeights = weights2,
-        fileRanges = s.fileRanges ++ w.ranges, op = "ingest-delta").withApplied(batchId))
+        fileRanges = s.fileRanges ++ w.ranges, op = "ingest-delta").withApplied(batchId),
+        Some(batchId -> w))
       true
     } finally releasePending(w.files) // referenced (or orphaned) either way
   }
@@ -981,11 +1007,13 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
     * slice costs one parquet file, so only skewed buckets pay, and total
     * files ≈ T + |affected|. TASKS are a separate budget: the slices are
     * packed into at most one wave (`min(slices, cores, maxTasks)` tasks),
-    * each task writing one file per bucket it holds. */
+    * each task writing one file per bucket it holds. The result's
+    * `writeMs` is this call's wall time: planning plus the write job. */
   private def rewriteBuckets(all: DataFrame, affected: Set[Int],
       keyCols: Seq[String], bucketWeights: Map[Int, Long],
       dropTombstonesBelowLsn: Option[Long] = None,
       clustered: Boolean = false, maxTasks: Int = Int.MaxValue): DeltaWrite = {
+    val t0 = System.nanoTime()
     val commitId = UUID.randomUUID().toString.take(12)
     val outDir = rootPath.resolve(s"data/commit-$commitId")
     val nAffected = math.max(affected.size, 1)
@@ -1045,7 +1073,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       tracker)
     val files = tracker.files.map(f => f.copy(path = s"data/commit-$commitId/${f.path}"))
     testWriteHook(files)
-    val w = deltaWrite(files)
+    val w = deltaWrite(files, (System.nanoTime() - t0) / 1000000)
     registerPending(w.files) // pending until the owning commit resolves
     w
   }
@@ -1067,10 +1095,7 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
       val current = LakeTable.readStringRaw(latestPtr).trim
       // ordered by parsed version: names widen past 10^8, so name order
       // would keep old snapshots; never expire the pointer target
-      val all = listed(snapsDir)
-        .filter(_.getFileName.toString.endsWith(".json"))
-        .flatMap(p => versionOfName(p.getFileName.toString).map(_ -> p))
-        .sortBy(_._1).map(_._2)
+      val all = snapshotFiles().map(_._2)
       val retained = (all.takeRight(keep).map(_.getFileName.toString) :+ current).toSet
       val retainedSnaps = all
         .filter(p => retained.contains(p.getFileName.toString))
@@ -1118,63 +1143,43 @@ class LakeTable(val spark: SparkSession, val root: String, val numBuckets: Int =
   // ---- lineage / metrics -------------------------------------------------
 
   /** Per-(batch, bucket) lineage rows (north_star: "per-partition lineage
-    * rows and ingest metrics emitted each micro-batch") — buffered in
-    * memory and flushed as ONE file per `lineageFlushEvery` batches, so
-    * lineage IO stays O(batches / flushEvery), not one file per batch.
-    * Metrics-only: a crash loses at most one unflushed window. */
-  val lineageFlushEvery: Int = 16
-  private val lineageBuf = new scala.collection.mutable.ArrayBuffer[String]
-  private var lineageBatches = 0
-
-  def bufferLineage(batchId: Long, perBucket: Seq[(Int, Long, Long, Long)],
-      durationMs: Long): Unit = synchronized {
-    perBucket.foreach { case (bucket, n, lsnMin, lsnMax) =>
-      lineageBuf += s"""{"batch_id":$batchId,"partition_id":$bucket,"events":$n,"lsn_min":$lsnMin,"lsn_max":$lsnMax,"duration_ms":$durationMs}"""
-    }
-    lineageBatches += 1
-    if (lineageBatches >= lineageFlushEvery) flushLineage()
-  }
-
-  def flushLineage(): Unit = synchronized {
-    if (lineageBuf.nonEmpty) {
-      val f = rootPath.resolve(s"lineage/lineage-${UUID.randomUUID().toString.take(12)}.jsonl")
-      LakeTable.writeStringRaw(f, lineageBuf.mkString("", "\n", "\n"))
-      lineageBuf.clear()
-    }
-    lineageBatches = 0
-  }
-
+    * rows and ingest metrics emitted each micro-batch"): `batch_id,
+    * partition_id, events, lsn_min, lsn_max, duration_ms`, all long, one
+    * row per bucket a batch wrote rows to, read from the record its ingest
+    * commit wrote into its snapshot — nothing is buffered, so a crash loses
+    * no committed batch's lineage. `duration_ms` is the write's wall time
+    * (planning plus the write job). A driver-side walk over the retained
+    * snapshots that parses only version, op and record (no manifest, no
+    * Spark job): lineage lives as long as its snapshots, like [[readAt]]
+    * and the change feed (the default `autoExpireEvery = 0` expires none). */
   def lineage(): DataFrame = {
-    flushLineage()
-    val dir = rootPath.resolve("lineage")
-    val any = listed(dir).exists(_.toString.endsWith(".jsonl"))
-    if (any) spark.read.json(dir.toString)
-    else spark.emptyDataFrame
+    val cur = currentVersion
+    val rows = snapshotFiles().takeWhile(_._1 <= cur).flatMap { case (_, p) =>
+      // a snapshot an expiry removed since the listing is out of retention
+      try lineageRows(p, readJson(p)) catch { case _: java.io.FileNotFoundException => Nil }
+    }
+    spark.createDataFrame(rows.asJava, lineageSchema)
   }
 
   /** Per-micro-batch ingest metrics (north_star: "per-partition lineage
     * rows and ingest metrics emitted each micro-batch"): one row per
-    * committed batch, aggregated from the per-(batch, bucket) lineage
+    * committed batch that wrote rows, aggregated from its [[lineage]]
     * rows. `events` is the rows each batch WROTE: for a merge-on-read
     * batch its LWW'd rows, for a copy-on-write batch every row of the
     * buckets it rewrote (the table's post-merge row count, not the batch's
     * events). Counts come from the committed task attempts' write stats
     * of the files each batch committed, so they are EXACT under task
     * retries and speculative execution (an accumulator-based count would
-    * double-count retried tasks). Emitted by every apply path,
-    * including the pipelined Structured Streaming sink (CdcPipeline
-    * buffers lineage at commit time). */
-  def ingestMetrics(): DataFrame = {
-    val l = lineage()
-    if (l.columns.isEmpty) return l
-    l.groupBy(col("batch_id"))
+    * double-count retried tasks). Every apply path records them: the
+    * commit does. */
+  def ingestMetrics(): DataFrame =
+    lineage().groupBy(col("batch_id"))
       .agg(
         sum(col("events")).as("events"),
         count(lit(1)).as("buckets_touched"),
         min(col("lsn_min")).as("lsn_min"),
         max(col("lsn_max")).as("lsn_max"),
         max(col("duration_ms")).as("duration_ms"))
-  }
 }
 
 object LakeTable {
@@ -1230,15 +1235,21 @@ object LakeTable {
 
   /** Result of [[writeDeltaFiles]]: per-bucket files, exact per-bucket
     * write stats (rows, lsnMin, lsnMax), any new public columns the
-    * batch introduces (committed by [[commitDelta]]), and per-file key
-    * ranges for data skipping. */
+    * batch introduces (committed by [[commitDelta]]), per-file key
+    * ranges for data skipping, and the write's wall time in ms. */
   final case class DeltaWrite(files: Map[Int, Seq[String]],
       stats: Seq[(Int, Long, Long, Long)], newColumns: Seq[StructField],
-      ranges: Map[String, (String, String)] = Map.empty)
+      ranges: Map[String, (String, String)] = Map.empty, writeMs: Long = 0L)
+
+  /** Commit kinds that apply a batch and carry its record. */
+  private def isIngest(op: String): Boolean = op == "ingest-delta" || op == "ingest-cow"
+
+  private val lineageSchema = StructType.fromDDL(
+    "batch_id LONG, partition_id LONG, events LONG, lsn_min LONG, lsn_max LONG, duration_ms LONG")
 
   /** A write's per-file stats folded into per-bucket files and stats (rows,
     * lsnMin, lsnMax; buckets with rows) and the per-file key ranges. */
-  private def deltaWrite(files: Seq[FileStat]): DeltaWrite = {
+  private def deltaWrite(files: Seq[FileStat], writeMs: Long): DeltaWrite = {
     val byBucket = files.groupBy(_.bucket).toSeq.sortBy(_._1)
     DeltaWrite(byBucket.map { case (b, fs) => b -> fs.map(_.path).sorted }.toMap,
       byBucket.map { case (b, fs) =>
@@ -1246,7 +1257,8 @@ object LakeTable {
           fs.flatMap(_.lsnMax).maxOption.getOrElse(0L))
       }.filter(_._2 > 0),
       Nil,
-      files.collect { case FileStat(_, p, _, _, _, Some(lo), Some(hi)) => p -> (lo, hi) }.toMap)
+      files.collect { case FileStat(_, p, _, _, _, Some(lo), Some(hi)) => p -> (lo, hi) }.toMap,
+      writeMs)
   }
 
   /** One bucket's state as serialized in a per-bucket manifest file: base
@@ -1299,8 +1311,8 @@ object LakeTable {
       graft.model.Model.metaCols)
 }
 
-/** Parquet footer reads: exact row counts for the change feed's
-  * row-based admission and `CdcStream`'s batch sizing. */
+/** Parquet footer reads: `CdcStream`'s sample of log-file row counts for
+  * batch sizing. The lake's own counts come from its write tasks. */
 object ParquetStats {
   import org.apache.parquet.HadoopReadOptions
   import org.apache.parquet.hadoop.ParquetFileReader

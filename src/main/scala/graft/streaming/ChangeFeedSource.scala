@@ -54,11 +54,11 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
   private val pinnedSchema: StructType = table.changeSchema
 
   /** version → (exact change-event count, files added) for that commit
-    * (parquet footer sums; files are immutable so an entry never changes).
+    * (counts from each commit's batch record; snapshots are immutable).
     * Filled in chunks during row-based admission, read back by `getBatch`
     * (saving the window a second history walk), pruned below each planned
     * offset — size stays O(versions examined but not yet consumed), and
-    * each file's footer is read ONCE over the stream's lifetime. */
+    * each snapshot is read for its count ONCE over the stream's lifetime. */
   private val infoByVersion =
     new java.util.concurrent.ConcurrentHashMap[java.lang.Long, (Long, Seq[String])]()
   /** Versions of row counts to prefetch per walk — amortizes the walk's
@@ -105,7 +105,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
     * compact/schema commits ride along for free and never form an empty
     * batch of their own), so a single oversized commit is admitted alone —
     * it can't be split, offsets are commit-aligned. Counts come from
-    * [[LakeTable.changeInfoByVersion]] footer sums, cached per version and
+    * [[LakeTable.changeInfoByVersion]] commit records, cached per version and
     * prefetched `rowWalkChunk` versions at a time so a far-behind consumer
     * doesn't pay one history walk per admission step. A walk error
     * (CoW commit) past the FIRST row-carrying version closes the
@@ -122,7 +122,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
         catch {
           // early window closure is only the INTENDED behavior for the
           // walk's own error shapes (CoW commit ahead); a transient
-          // infrastructure error (footer IO) must not be silently folded
+          // infrastructure error (snapshot IO) must not be silently folded
           // into a shorter window, so say which error closed it
           case scala.util.control.NonFatal(e) if rows > 0 =>
             log.warn("row admission stopped at " +
@@ -215,7 +215,7 @@ class ChangeFeedSource(spark: SparkSession, table: LakeTable,
   * `latest`, default latest: tail new changes only; `0` replays the full
   * retained history), `maxVersionsPerTrigger` (bound commits per
   * micro-batch, default unbounded), `maxRowsPerTrigger` (bound EVENTS per
-  * micro-batch — exact footer-stat counts, window still commit-aligned so
+  * micro-batch — exact counts from each commit's record, window still commit-aligned so
   * one oversized commit is admitted alone; the sturdier cold-start knob
   * when producer batch sizes vary). */
 class ChangeFeedSourceProvider extends StreamSourceProvider with DataSourceRegister {

@@ -225,16 +225,12 @@ object GraftShim {
       case _ => ()
     }
 
-  /** The file-stream source's durable per-batch file manifest
-    * (`<checkpoint>/sources/0`), written by the source BEFORE a batch's
-    * foreachBatch runs — the recovery journal of the pipelined streaming
-    * apply. `private[sql]` in Spark, hence this in-package bridge. */
-  def sourceBatchFiles(spark: SparkSession, checkpointRoot: String,
-      batchId: Long): Seq[String] =
-    sourceLogReader(spark, checkpointRoot)(batchId)
-
-  /** A reusable reader over the source log — construct ONCE per stream and
-    * reuse per batch: the log instance keeps an entry cache, so the hot
+  /** A reader from batch id to files over the file-stream source's durable
+    * per-batch file manifest (`<checkpoint>/sources/0`), written by the
+    * source BEFORE a batch's foreachBatch runs — the recovery journal of
+    * the pipelined streaming apply. `private[sql]` in Spark, hence this
+    * in-package bridge. Construct it ONCE per stream and reuse it per
+    * batch: the log instance keeps an entry cache, so the hot
     * path avoids re-constructing the metadata log (and re-parsing compact
     * files, which carry the stream's full history) every micro-batch. */
   def sourceLogReader(spark: SparkSession, checkpointRoot: String): Long => Seq[String] = {

@@ -20,7 +20,9 @@ import org.apache.spark.sql.GraftShim
   *  3. recovery after the file source COMPACTED its log (compactInterval=2)
   *     — journaled batches must still be recoverable through compact files;
   *  4. abort with `pipelineDepth` writes held in flight, then restart —
-  *     the deterministic form of the StreamSpec abort race. */
+  *     the deterministic form of the StreamSpec abort race;
+  *  5. a crash right after a commit, then a restart as a NEW table
+  *     instance — lineage must still hold every committed batch once. */
 class CrashWindowSpec extends SparkSpec {
 
   private def finalStateOf(table: LakeTable): Map[(String, Int), (String, String)] =
@@ -184,5 +186,52 @@ class CrashWindowSpec extends SparkSpec {
     }
     val applied = table.currentSnapshot.appliedBatchIds
     assert(applied.size == applied.toSeq.distinct.size, "no double apply")
+  }
+
+  test("lineage is exact across crash and restart: a new table instance sees every committed batch once") {
+    val cfg = ChangeLogGen.Config(numEvents = 8000, numConversations = 40, maxTurns = 16)
+    val logDir = tmpDir("lincrash-log")
+    val ckDir = tmpDir("lincrash-ck")
+    val root = tmpDir("lincrash-table")
+    ChangeLogGen.writeLog(spark, logDir, cfg, numSegments = 4, filesPerSegment = 4)
+    val table = new LakeTable(spark, root, numBuckets = 2)
+    table.create(Model.transcriptSchema)
+    val opts = CdcApply.Options(mergeOnRead = true, pipelineDepth = 4, compactEvery = 100)
+
+    // crash right after the third commit: the hook runs on the committer
+    // inside that commit, which completes (commits are interrupt-immune);
+    // the abort leaves nothing queued to commit after it
+    val pipeline = new CdcPipeline(spark, table, GraftShim.sourceLogReader(spark, ckDir), opts)
+    val commits = new java.util.concurrent.atomic.AtomicInteger()
+    table.testMidCommitHook = () => if (commits.incrementAndGet() == 3) pipeline.abort()
+    val q = spark.readStream.schema(Model.changeEventSchema)
+      .option("maxFilesPerTrigger", 2).option("recursiveFileLookup", "true")
+      .parquet(logDir)
+      .writeStream.option("checkpointLocation", ckDir)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        pipeline.submit(batch, id); ()
+      }
+      .start()
+    var waited = 0
+    while (table.currentVersion < 3 && waited < 600) { Thread.sleep(100); waited += 1 }
+    try { q.stop(); q.awaitTermination() }
+    catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
+    assert(table.currentVersion == 3L, "exactly the three pre-crash commits landed")
+
+    // restart as a new process would: a new table instance on the same root
+    val reopened = new LakeTable(spark, root, numBuckets = 2)
+    CdcStream.runOnce(spark, logDir, reopened, ckDir, maxFilesPerTrigger = 2, opts)
+    val journal = GraftShim.sourceLogBatches(spark, ckDir, 0L)
+    assert(journal.size > 3 && reopened.currentSnapshot.appliedWatermark == journal.last._1)
+    val expected = journal.map { case (id, files) =>
+      id -> (if (files.isEmpty) 0L else CdcApply.lwwDedup(CdcApply.prepareBatch(
+        spark.read.schema(Model.changeEventSchema).parquet(files: _*)), Model.keyCols, 1).count())
+    }.filter(_._2 > 0).toMap
+    val metrics = reopened.ingestMetrics().collect()
+      .map(r => r.getLong(r.fieldIndex("batch_id")) -> r.getLong(r.fieldIndex("events")))
+    assert(metrics.length == expected.size && metrics.toMap == expected,
+      s"ingest metrics ${metrics.toSeq.sorted} expected ${expected.toSeq.sorted}")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "lineage")))
   }
 }

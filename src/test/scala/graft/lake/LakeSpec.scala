@@ -159,10 +159,9 @@ class LakeSpec extends SparkSpec {
     table.commitDelta(10001L, LakeTable.DeltaWrite(Map.empty, Nil, Nil))
     val s2 = table.currentSnapshot
     assert(s2.appliedWatermark == 10002L && s2.appliedExceptions.isEmpty)
-    // lineage files are periodic, not per-batch
-    val linFiles = java.nio.file.Files.list(java.nio.file.Paths.get(table.root, "lineage"))
-      .iterator().asScala.size
-    assert(linFiles <= 1, s"lineage must batch into periodic files, got $linFiles")
+    // lineage is each commit's own record: there are no side files
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(table.root, "lineage")),
+      "no lineage/ directory exists")
   }
 
   test("rescale mid-replay: state preserved, merges continue under new bucketing") {
@@ -552,6 +551,21 @@ class LakeSpec extends SparkSpec {
       assert(e.getMessage.contains("v00000001.json") && e.getMessage.contains(s"'$field'"),
         e.getMessage)
     }
+    // an ingest commit without its batch record (the table's lineage)
+    val ingestDir = tmpDir("strict-ingest-table")
+    val t = new LakeTable(spark, ingestDir, numBuckets = 2)
+    t.create(Model.transcriptSchema)
+    t.commitDelta(0L, LakeTable.DeltaWrite(Map.empty, Nil, Nil))
+    val node = snapshotJson(ingestDir, "v00000001.json")
+    assert(node.get("op").asText == "ingest-delta" && node.has("ingest"))
+    node.remove("ingest")
+    publishSnapshot(ingestDir, "v00000002.json", node)
+    val reopened = new LakeTable(spark, ingestDir, numBuckets = 2)
+    Seq[() => Any](() => reopened.currentSnapshot, () => reopened.lineage()).foreach { read =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("v00000002.json") && e.getMessage.contains("'ingest'"),
+        e.getMessage)
+    }
   }
 
   test("commit is a version CAS: a racing writer's claimed version fails loudly") {
@@ -762,6 +776,47 @@ class LakeSpec extends SparkSpec {
       "empty window must yield no events")
     assert(table.readChangesSince(0L).count() == 6, "full window = all events")
     intercept[IllegalArgumentException](table.readChangesSince(-1L))
+  }
+
+  test("maintenance commits add no lineage, and feed counts equal footers") {
+    val table = new LakeTable(spark, tmpDir("lin-maint"), numBuckets = 4)
+    table.create(Model.transcriptSchema)
+    val mor = CdcApply.Options(mergeOnRead = true, compactEvery = 100)
+    def batch(lsn0: Long, n: Int) = cfBatch((0 until n).map(i =>
+      (lsn0 + i, "I", s"c${i % 7}", i, "user", s"t${lsn0 + i}")))
+    val rows0 = CdcApply.applyBatch(table, batch(1L, 40), 0L, mor) // v1
+    table.compact() // v2
+    table.evolveSchema(Seq(org.apache.spark.sql.types.StructField("note",
+      org.apache.spark.sql.types.StringType))) // v3
+    table.rescale(8) // v4
+    table.commitDelta(1L, LakeTable.DeltaWrite(Map.empty, Nil, Nil)) // v5
+    val rows2 = CdcApply.applyBatch(table, batch(100L, 25), 2L, mor) // v6
+    assert(table.currentVersion == 6L && rows0 == 40L && rows2 == 25L)
+
+    // lineage: the two ingest batches, each with exactly one row per bucket
+    // its write touched, however many commits inherited its snapshot
+    val lin = table.lineage().collect().map(r => (r.getAs[Long]("batch_id"),
+      r.getAs[Long]("partition_id"), r.getAs[Long]("events")))
+    assert(lin.map(_._1).toSet == Set(0L, 2L), s"lineage batch ids: ${lin.toSeq}")
+    Seq(0L -> rows0, 2L -> rows2).foreach { case (id, rows) =>
+      val mine = lin.filter(_._1 == id)
+      assert(mine.map(_._2).distinct.length == mine.length, s"batch $id: ${mine.toSeq}")
+      assert(mine.map(_._3).sum == rows, s"batch $id: ${mine.toSeq}")
+    }
+
+    // the feed's per-version counts equal a footer read of each version's
+    // added files (the reference); maintenance and the empty commit count 0
+    val conf = spark.sessionState.newHadoopConf()
+    val counts = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
+    table.changeInfoByVersion(0L, table.currentVersion) { (v, rows, files) =>
+      counts += ((v, rows, files.map(f =>
+        ParquetStats.rowCount(java.nio.file.Paths.get(table.root).resolve(f).toString, conf)).sum))
+    }
+    assert(counts.map(_._1) == (1L to 6L), counts)
+    counts.foreach { case (v, rows, footer) =>
+      assert(rows == footer, s"v$v: feed count $rows, footers $footer")
+    }
+    assert(counts.map(_._2) == Seq(rows0, 0L, 0L, 0L, 0L, rows2), counts)
   }
 
   test("readChangesSince rejects copy-on-write ingest in the window loudly") {
